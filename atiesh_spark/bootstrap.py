@@ -39,7 +39,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from atiesh_spark.pipeline import Pipeline
+from atiesh_spark.pipeline import PIPELINE_KEYS, Pipeline
 
 # ---------------------------------------------------------------------------
 # HOCON-subset parser
@@ -258,9 +258,6 @@ _FQCN_TYPES = {
     "atiesh.interceptor.DevNull": "devnull",
     # sinks
     "atiesh.sink.DevNull": "devnull",
-    "atiesh.sink.KafkaSink": "kafka",
-    "atiesh.sink.KafkaLimitAckSink": "kafka",
-    "atiesh.sink.KafkaSynchronousAckSink": "kafka",
     "atiesh.sink.HttpSink": "http",
     "atiesh.sink.SyslogSink": "syslog",
     "atiesh.sink.AliyunSLSSink": "logservice",
@@ -302,14 +299,9 @@ def _from_reference_layout(atiesh: dict[str, Any]) -> dict[str, Any]:
     }
     for name, cfg in sources.items():
         cfg = _native_type(cfg, "source", name)
-        pipe: dict[str, Any] = {
-            "name": name,
-            "source": name,
-            "interceptors": cfg.pop("interceptors", []),
-            "sinks": cfg.pop("sinks", []),
-        }
-        for k in ("trigger", "checkpoint", "skip_accept_check_on_single"):
-            if k in cfg:
+        pipe: dict[str, Any] = {"name": name, "source": name}
+        for k in PIPELINE_KEYS:
+            if k in cfg and k not in pipe:
                 pipe[k] = cfg.pop(k)
         spec["sources"][name] = cfg
         spec["pipelines"].append(pipe)

@@ -1,4 +1,5 @@
-"""Config-plane helpers: HOCON-style size and duration literals.
+"""Config-plane helpers: spec components bound to their builders, and
+HOCON-style size and duration literals.
 
 The reference's Configuration wrapper exposes typed getters including
 byte sizes and durations (Configuration.scala:76-139: getBytes,
@@ -9,7 +10,11 @@ expected.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import re
+from collections.abc import Callable
+from typing import Any
 
 _SIZE_UNITS = {
     "": 1, "b": 1,
@@ -56,3 +61,35 @@ def parse_duration_seconds(value: int | float | str) -> float:
     if unit not in _DURATION_UNITS:
         raise ValueError(f"unknown duration unit {unit!r} in {value!r}")
     return float(num) * _DURATION_UNITS[unit]
+
+
+#: spec section -> (keys the pipeline keeps back from the builder, number
+#: of leading builder arguments the caller supplies: session or frame)
+_SECTIONS = {
+    "source": (("type",), 1),
+    "interceptor": (("type", "priority"), 1),
+    "sink": (("type", "accept"), 0),
+}
+
+
+def bind_component(
+    section: str, registry: dict[str, Callable[..., Any]], cfg: dict[str, Any]
+) -> Callable[..., Any]:
+    """Bind one spec component to the builder its ``type`` names: every
+    other key the pipeline does not keep back is a keyword argument of
+    the builder. An unknown type, unknown option or missing required
+    option raises ValueError before anything is built."""
+    kept, leading = _SECTIONS[section]
+    ctype = cfg.get("type")
+    if ctype not in registry:
+        raise ValueError(f"unknown {section} type {ctype!r}; known: {sorted(registry)}")
+    options = {k: v for k, v in cfg.items() if k not in kept}
+    sig = inspect.signature(registry[ctype])
+    params = list(sig.parameters.values())[leading:]
+    try:
+        sig.replace(parameters=params).bind(**options)
+    except TypeError as exc:
+        raise ValueError(
+            f"{section} type {ctype!r}: {exc}; options: {[p.name for p in params]}"
+        ) from None
+    return functools.partial(registry[ctype], **options)

@@ -6,6 +6,9 @@ and components start in a fixed order (AtieshServer.scala:116-164,
 Source.scala:59-121). Here the spec is a plain dict, "assembly" is
 logical-plan construction, Catalyst analysis replaces name-wiring
 validation of column refs, and query.start() replaces Open/Ready.
+A component's options are its builder's keyword arguments, so
+``Pipeline(...)`` rejects an unknown type, option or pipeline key
+before any query starts.
 
 Routing uses the reference's `first-accepted` strategy: each event goes
 to the FIRST sink in the pipeline's list whose accept predicate holds;
@@ -27,37 +30,55 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from atiesh_spark.config import bind_component
 from atiesh_spark.operators.routing import route_first_accepted
-from atiesh_spark.streaming.interceptors import build_interceptor_chain
-from atiesh_spark.streaming.sinks import build_sink_writer
-from atiesh_spark.streaming.sources import build_source
+from atiesh_spark.streaming.interceptors import INTERCEPTOR_BUILDERS, build_interceptor_chain
+from atiesh_spark.streaming.sinks import SINK_BUILDERS, build_sink_writer
+from atiesh_spark.streaming.sources import SOURCE_BUILDERS, build_source
+
+
+#: every key a pipeline entry may carry
+PIPELINE_KEYS = (
+    "name", "source", "interceptors", "sinks",
+    "trigger", "checkpoint", "skip_accept_check_on_single",
+)
 
 
 def _validate(spec: dict[str, Any]) -> None:
-    sources = spec.get("sources", {})
-    interceptors = spec.get("interceptors", {})
-    sinks = spec.get("sinks", {})
+    sections = {
+        "source": (spec.get("sources", {}), SOURCE_BUILDERS),
+        "interceptor": (spec.get("interceptors", {}), INTERCEPTOR_BUILDERS),
+        "sink": (spec.get("sinks", {}), SINK_BUILDERS),
+    }
+    for section, (components, registry) in sections.items():
+        for name, cfg in components.items():
+            try:
+                bind_component(section, registry, cfg)
+            except ValueError as exc:
+                raise ValueError(f"{section} {name!r}: {exc}") from None
     pipelines = spec.get("pipelines", [])
     if not pipelines:
         raise ValueError("spec has no pipelines")
     for i, p in enumerate(pipelines):
-        if p.get("source") not in sources:
+        unknown = sorted(set(p) - set(PIPELINE_KEYS))
+        if unknown:
             raise ValueError(
-                f"pipeline[{i}]: unknown source {p.get('source')!r}; known: {sorted(sources)}"
+                f"pipeline[{i}]: unknown key {unknown[0]!r}; known: {list(PIPELINE_KEYS)}"
             )
-        for iname in p.get("interceptors", []):
-            if iname not in interceptors:
-                raise ValueError(
-                    f"pipeline[{i}]: unknown interceptor {iname!r}; known: {sorted(interceptors)}"
-                )
-        snames = p.get("sinks", [])
-        if not snames:
+        if not p.get("sinks"):
             raise ValueError(f"pipeline[{i}]: needs at least one sink")
-        for sname in snames:
-            if sname not in sinks:
-                raise ValueError(
-                    f"pipeline[{i}]: unknown sink {sname!r}; known: {sorted(sinks)}"
-                )
+        refs = {
+            "source": [p.get("source")],
+            "interceptor": p.get("interceptors", []),
+            "sink": p["sinks"],
+        }
+        for section, names in refs.items():
+            known = sections[section][0]
+            for n in names:
+                if n not in known:
+                    raise ValueError(
+                        f"pipeline[{i}]: unknown {section} {n!r}; known: {sorted(known)}"
+                    )
 
 
 class Pipeline:

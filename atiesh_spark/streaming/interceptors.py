@@ -19,20 +19,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from atiesh_spark.config import bind_component
 
-def apply_transparent(df: DataFrame, cfg: dict) -> DataFrame:
+
+def apply_transparent(df: DataFrame) -> DataFrame:
     return df
 
 
-def apply_devnull(df: DataFrame, cfg: dict) -> DataFrame:
+def apply_devnull(df: DataFrame) -> DataFrame:
     return df.filter(F.lit(False))
 
 
-def apply_filter(df: DataFrame, cfg: dict) -> DataFrame:
-    return df.filter(F.expr(cfg["predicate"]))
+def apply_filter(df: DataFrame, predicate: str) -> DataFrame:
+    return df.filter(F.expr(predicate))
 
 
-def apply_transform(df: DataFrame, cfg: dict) -> DataFrame:
+def apply_transform(
+    df: DataFrame, exprs: dict[str, str], on_error: str | None = None
+) -> DataFrame:
     """Rewrite columns with SQL expressions.
 
     on_error='keep_original' mirrors the reference policy "interceptor
@@ -43,54 +47,49 @@ def apply_transform(df: DataFrame, cfg: dict) -> DataFrame:
     default.
     """
     out = df
-    keep_original = cfg.get("on_error") == "keep_original"
-    for col, expr in cfg["exprs"].items():
+    for col, expr in exprs.items():
         e = F.expr(expr)
-        if keep_original and col in out.columns:
-            e = F.coalesce(F.expr(expr), F.col(col))
+        if on_error == "keep_original" and col in out.columns:
+            e = F.coalesce(e, F.col(col))
         out = out.withColumn(col, e)
     return out
 
 
-def apply_blocklist(df: DataFrame, cfg: dict) -> DataFrame:
+def apply_blocklist(
+    df: DataFrame, patterns: list[str], column: str = "value", engine: str = "auto"
+) -> DataFrame:
     """Drop events whose payload contains any banned phrase — the batch
     ``operators/blocklist.py`` gate exposed as a streaming interceptor
     (the reference's registry-by-type extension seam: a new type name
-    plus an Event => Event function). cfg: ``patterns`` (required),
-    ``column`` (default 'value'), ``engine`` (default 'auto')."""
+    plus an Event => Event function)."""
     from atiesh_spark.operators.blocklist import blocklist_filter
 
-    return blocklist_filter(
-        df,
-        cfg.get("column", "value"),
-        cfg["patterns"],
-        engine=cfg.get("engine", "auto"),
-    )
+    return blocklist_filter(df, column, patterns, engine=engine)
 
 
-def apply_normalize(df: DataFrame, cfg: dict) -> DataFrame:
+def apply_normalize(
+    df: DataFrame,
+    column: str = "value",
+    form: str = "NFC",
+    lowercase: bool = True,
+    strip_accents: bool = False,
+    collapse_whitespace: bool = True,
+) -> DataFrame:
     """Unicode-normalize the payload in-stream (functions/text.py
     normalize_text — the q114 contract): canonical composition, case
     folding, whitespace collapse before any downstream hash/dedup/
-    tokenize step. cfg: ``column`` (default 'value'), ``form``
-    (default 'NFC'), ``lowercase``/``strip_accents``/
-    ``collapse_whitespace`` booleans."""
+    tokenize step."""
     from atiesh_spark.functions.text import normalize_text
 
-    col = cfg.get("column", "value")
-    return df.withColumn(
-        col,
-        normalize_text(
-            col,
-            form=cfg.get("form", "NFC"),
-            lowercase=cfg.get("lowercase", True),
-            strip_accents=cfg.get("strip_accents", False),
-            collapse_whitespace=cfg.get("collapse_whitespace", True),
-        ),
+    normalized = normalize_text(
+        column, form=form, lowercase=lowercase, strip_accents=strip_accents,
+        collapse_whitespace=collapse_whitespace,
     )
+    return df.withColumn(column, normalized)
 
 
-_INTERCEPTORS = {
+#: spec ``type`` -> builder, called as ``builder(df, **options)``.
+INTERCEPTOR_BUILDERS = {
     "transparent": apply_transparent,
     "devnull": apply_devnull,
     "filter": apply_filter,
@@ -106,12 +105,6 @@ def build_interceptor_chain(df: DataFrame, chain: list[dict]) -> DataFrame:
     ordered = sorted(
         enumerate(chain), key=lambda t: (-t[1].get("priority", 0), t[0])
     )
-    out = df
     for _, cfg in ordered:
-        itype = cfg.get("type")
-        if itype not in _INTERCEPTORS:
-            raise ValueError(
-                f"unknown interceptor type {itype!r}; known: {sorted(_INTERCEPTORS)}"
-            )
-        out = _INTERCEPTORS[itype](out, cfg)
-    return out
+        df = bind_component("interceptor", INTERCEPTOR_BUILDERS, cfg)(df)
+    return df

@@ -14,16 +14,18 @@ from __future__ import annotations
 
 import base64
 import gzip as _gzip
+import inspect
 import random
 import socket
 import time
-import urllib.error
 import urllib.request
 from collections.abc import Callable, Iterable
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from atiesh_spark.config import bind_component
 
 
 # --- trivial sinks -----------------------------------------------------------
@@ -118,17 +120,8 @@ def kafka_sink_options(bootstrap_servers: str, must_send: bool = False) -> dict[
 # --- HTTP sink ---------------------------------------------------------------
 
 
-def _default_http_transport(
-    method: str, url: str, body: bytes | None, headers: dict[str, str], timeout: float
-) -> tuple[int, bytes]:
-    """One-shot transport: fresh connection per request (kept for injection
-    compatibility; the writer's hot path uses PersistentHttpTransport)."""
-    req = urllib.request.Request(url, data=body, headers=headers, method=method)
-    try:
-        with urllib.request.urlopen(req, timeout=timeout) as resp:
-            return resp.status, resp.read()
-    except urllib.error.HTTPError as e:
-        return e.code, e.read()
+#: the reference's retry backoff cap (HttpLimitRequestSinkSemantics.scala:123-141)
+_BACKOFF_CAP_S = 32.0
 
 
 class PersistentHttpTransport:
@@ -218,7 +211,6 @@ class HttpSinkWriter:
         content_type: str = "text/plain",
         query_key: str = "payload",
         max_retries: int = 3,
-        backoff_cap: float = 32.0,
         timeout: float = 10.0,
         transport: Callable[..., tuple[int, bytes]] | None = None,
         sleeper: Callable[[float], None] = time.sleep,
@@ -237,7 +229,6 @@ class HttpSinkWriter:
         self.content_type = content_type
         self.query_key = query_key
         self.max_retries = max_retries
-        self.backoff_cap = backoff_cap
         self.timeout = timeout
         # None -> a PersistentHttpTransport per partition (keep-alive);
         # injected transports are used as-is (tests, custom senders)
@@ -245,14 +236,15 @@ class HttpSinkWriter:
         self.sleeper = sleeper
         self.headers: dict[str, str] = {"Content-Type": content_type}
         if auth is not None:
-            token = base64.b64encode(f"{auth[0]}:{auth[1]}".encode()).decode()
+            user, password = auth
+            token = base64.b64encode(f"{user}:{password}".encode()).decode()
             self.headers["Authorization"] = f"Basic {token}"
         if use_gzip:
             self.headers["Content-Encoding"] = "gzip"
 
     # -- single request with the reference's retry/backoff policy
     def _send(self, payload: str, transport: Callable[..., tuple[int, bytes]] | None = None) -> str:
-        transport = transport or self.transport or _default_http_transport
+        transport = transport or self.transport
         attempt = 0
         while True:
             if self.method == "GET":
@@ -275,7 +267,7 @@ class HttpSinkWriter:
                 raise RuntimeError(
                     f"HTTP sink exhausted {self.max_retries} retries (last status {status})"
                 )
-            delay = min(2.0**attempt + random.random(), self.backoff_cap)
+            delay = min(2.0**attempt + random.random(), _BACKOFF_CAP_S)
             self.sleeper(delay)
             attempt += 1
 
@@ -532,49 +524,34 @@ class LogServiceSinkWriter:
 # --- registry ----------------------------------------------------------------
 
 
+def _spec_names(builder: Callable[..., object], **spec_keys: str) -> Callable[..., object]:
+    """``builder`` with some keyword parameters spelled as the spec spells
+    them (``spec_key="parameter"``); the defaults stay the builder's."""
+    sig = inspect.signature(builder)
+    spec_name = {param: key for key, param in spec_keys.items()}
+
+    def build(**options):
+        return builder(**{spec_keys.get(k, k): v for k, v in options.items()})
+
+    build.__signature__ = sig.replace(
+        parameters=[p.replace(name=spec_name.get(p.name, p.name)) for p in sig.parameters.values()]
+    )
+    return build
+
+
+#: spec ``type`` -> builder, called as ``builder(**options)``; returns a
+#: ``(batch_df, batch_id)`` writer.
+SINK_BUILDERS = {
+    "devnull": lambda: devnull_writer,
+    "parquet": parquet_writer,
+    "parquet_exactly_once": idempotent_parquet_writer,
+    "memory": memory_rows,
+    "http": _spec_names(HttpSinkWriter, gzip="use_gzip"),
+    "syslog": _spec_names(SyslogSinkWriter, tls="use_tls"),
+    "logservice": LogServiceSinkWriter,
+}
+
+
 def build_sink_writer(cfg: dict) -> Callable[[DataFrame, int], None]:
     """Instantiate a sink writer from a pipeline-spec section."""
-    stype = cfg.get("type")
-    if stype == "devnull":
-        return devnull_writer
-    if stype == "parquet":
-        return parquet_writer(cfg["path"])
-    if stype == "parquet_exactly_once":
-        return idempotent_parquet_writer(cfg["path"])
-    if stype == "memory":
-        return memory_rows(cfg["collected"])
-    if stype == "http":
-        return HttpSinkWriter(
-            url=cfg["url"],
-            method=cfg.get("method", "POST"),
-            batch_size=cfg.get("batch_size"),
-            use_gzip=cfg.get("gzip", False),
-            auth=tuple(cfg["auth"]) if "auth" in cfg else None,
-            content_type=cfg.get("content_type", "text/plain"),
-            max_retries=cfg.get("max_retries", 3),
-            transport=cfg.get("transport"),
-            sleeper=cfg.get("sleeper", time.sleep),
-        )
-    if stype == "syslog":
-        return SyslogSinkWriter(
-            host=cfg.get("host", "localhost"),
-            port=cfg.get("port", 514),
-            rfc=cfg.get("rfc", "3164"),
-            facility=cfg.get("facility", "user"),
-            severity=cfg.get("severity", "info"),
-            appname=cfg.get("appname", "atiesh"),
-            transport=cfg.get("transport", "udp"),
-            use_tls=cfg.get("tls", False),
-            cafile=cfg.get("cafile"),
-            framing=cfg.get("framing", "lf"),
-            sender=cfg.get("sender"),
-        )
-    if stype == "logservice":
-        return LogServiceSinkWriter(
-            client=cfg["client"],
-            topic=cfg.get("topic"),
-            source=cfg.get("source"),
-            shard_key_header=cfg.get("shard_key_header"),
-            grouped=cfg.get("grouped", True),
-        )
-    raise ValueError(f"unknown sink type {stype!r}")
+    return bind_component("sink", SINK_BUILDERS, cfg)()

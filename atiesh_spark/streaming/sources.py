@@ -20,8 +20,13 @@ chains compose identically on any source.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from atiesh_spark.config import bind_component
+from atiesh_spark.model import to_events
 
 
 def devzero_source(
@@ -63,20 +68,24 @@ def dirwatch_source(
     Long-line policy (lines 224-245): truncate=True caps the value;
     truncate=False (reference default) drops the line.
     """
+    # imported here, not at module level: Python workers import this
+    # package to unpickle sink writers, and functions.text loads pandas
+    from atiesh_spark.functions.text import drop_long_lines, truncate_lines
+
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     df = reader.load(path)
     value = F.col("value")
     if max_line_length is not None and truncate:
-        value = F.substring(value, 1, max_line_length)
+        value = truncate_lines(value, max_line_length)
     if with_headers:
         headers = F.create_map(F.lit("fn"), F.input_file_name())
     else:
         headers = F.create_map()
     out = df.select(value.alias("value"), headers.alias("headers"))
     if max_line_length is not None and not truncate:
-        out = out.filter(F.length("value") <= max_line_length)
+        out = drop_long_lines(out, "value", max_line_length)
     return out
 
 
@@ -169,7 +178,13 @@ def kafka_source_options(
     return opts
 
 
-def kafka_source(spark: SparkSession, **kwargs) -> DataFrame:
+def kafka_source(
+    spark: SparkSession,
+    bootstrap_servers: str,
+    topics: list[str],
+    seek: str | None = None,
+    max_offsets_per_trigger: int | None = None,
+) -> DataFrame:
     """Kafka consumer -> canonical events.
 
     Record value becomes the payload; kafkaTopic/kafkaPartition headers
@@ -179,7 +194,7 @@ def kafka_source(spark: SparkSession, **kwargs) -> DataFrame:
     Requires the Kafka connector on the classpath (not bundled with
     PySpark): ``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>``.
     """
-    opts = kafka_source_options(**kwargs)
+    opts = kafka_source_options(bootstrap_servers, topics, seek, max_offsets_per_trigger)
     try:
         df = spark.readStream.format("kafka").options(**opts).load()
     except Exception as exc:
@@ -199,90 +214,89 @@ def kafka_source(spark: SparkSession, **kwargs) -> DataFrame:
     )
 
 
-_SOURCE_BUILDERS = {
-    "devzero": lambda spark, cfg: devzero_source(
-        spark,
-        rows_per_second=cfg.get("rows_per_second", 1024),
-        payload=cfg.get("payload", "0"),
-    ),
-    "dirwatch": lambda spark, cfg: dirwatch_source(
-        spark,
-        path=cfg["path"],
-        max_files_per_trigger=cfg.get("max_files_per_trigger"),
-        with_headers=cfg.get("with_headers", True),
-        max_line_length=cfg.get("max_line_length"),
-        truncate=cfg.get("truncate", False),
-    ),
-    "kafka": lambda spark, cfg: kafka_source(
-        spark,
-        bootstrap_servers=cfg["bootstrap_servers"],
-        topics=cfg["topics"],
-        seek=cfg.get("seek"),
-        max_offsets_per_trigger=cfg.get("max_offsets_per_trigger"),
-    ),
-    "dirwatch_offsets": lambda spark, cfg: dirwatch_source_with_offsets(
-        spark,
-        path=cfg["path"],
-        max_files_per_trigger=cfg.get("max_files_per_trigger"),
-        max_line_length=cfg.get("max_line_length"),
-        truncate=cfg.get("truncate", False),
-    ),
-    "http_push": lambda spark, cfg: _http_push_source(spark, cfg),
-    "json": lambda spark, cfg: _structured_file_source(spark, cfg, "json"),
-    "csv": lambda spark, cfg: _structured_file_source(spark, cfg, "csv"),
-}
-
-
-def _structured_file_source(spark: SparkSession, cfg: dict, fmt: str) -> DataFrame:
-    """Schema'd file stream (json/csv) -> canonical events.
+def json_source(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    max_files_per_trigger: int | None = None,
+    value_col: str = "value",
+    header_cols: Iterable[str] = (),
+) -> DataFrame:
+    """Schema'd JSON-lines file stream -> canonical events.
 
     The reference only reads raw lines; structured file formats are the
     engine-native upgrade: a user schema (DDL string) parses records at
-    scan time, and ``value_col`` picks the payload column (others become
-    headers if listed). Streaming file sources REQUIRE an explicit
-    schema — inference would race the data.
+    scan time, ``value_col`` picks the payload column and the listed
+    ``header_cols`` become headers. Streaming file sources REQUIRE an
+    explicit schema — inference would race the data.
     """
-    reader = spark.readStream.format(fmt).schema(cfg["schema"])
-    if cfg.get("max_files_per_trigger") is not None:
-        reader = reader.option("maxFilesPerTrigger", cfg["max_files_per_trigger"])
-    if fmt == "csv":
-        reader = reader.option("header", str(cfg.get("header", False)).lower())
-    df = reader.load(cfg["path"])
-    value_col = cfg.get("value_col", "value")
-    header_cols = cfg.get("header_cols", [])
-    pairs: list = []
-    for h in header_cols:
-        pairs.extend([F.lit(h), F.col(h).cast("string")])
-    return df.select(
-        F.col(value_col).cast("string").alias("value"),
-        (F.create_map(*pairs) if pairs else F.create_map()).alias("headers"),
-    )
+    reader = spark.readStream.format("json")
+    return _file_events(reader, path, schema, max_files_per_trigger, value_col, header_cols)
 
 
-def _http_push_source(spark: SparkSession, cfg: dict) -> DataFrame:
-    """Passive HTTP ingress (custom Python data source, sources/http_push.py)."""
+def csv_source(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    max_files_per_trigger: int | None = None,
+    value_col: str = "value",
+    header_cols: Iterable[str] = (),
+    header: bool = False,
+) -> DataFrame:
+    """``json_source`` for csv files; ``header`` marks files that start
+    with a header line."""
+    reader = spark.readStream.format("csv").option("header", header)
+    return _file_events(reader, path, schema, max_files_per_trigger, value_col, header_cols)
+
+
+def _file_events(reader, path, schema, max_files_per_trigger, value_col, header_cols) -> DataFrame:
+    reader = reader.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return to_events(reader.load(path), value_col, {h: h for h in header_cols})
+
+
+def http_push_source(
+    spark: SparkSession,
+    port: int,
+    delimiter: str | None = None,
+    capture_prefix: str | None = None,
+    max_queue: int | None = None,
+) -> DataFrame:
+    """Passive HTTP ingress (custom Python data source, sources/http_push.py).
+
+    Unset options keep the data source's own defaults."""
     from atiesh_spark.sources.http_push import register_http_push
 
-    if not cfg.get("port"):
+    if not port:
         # port 0 (ephemeral) is a test-only mode: Spark instantiates the
         # data source in several Python workers, and each port-0 instance
         # would bind a DIFFERENT ephemeral port that no producer can
         # discover — a pipeline would silently ingest nothing.
         raise ValueError("http_push pipelines require an explicit 'port'")
     register_http_push(spark)
-    reader = spark.readStream.format("http_push").option("port", cfg["port"])
-    if cfg.get("delimiter"):
-        reader = reader.option("delimiter", cfg["delimiter"])
-    if cfg.get("capture_prefix"):
-        reader = reader.option("capturePrefix", cfg["capture_prefix"])
-    if cfg.get("max_queue"):
-        reader = reader.option("maxQueue", cfg["max_queue"])
+    reader = spark.readStream.format("http_push").option("port", port)
+    if delimiter:
+        reader = reader.option("delimiter", delimiter)
+    if capture_prefix:
+        reader = reader.option("capturePrefix", capture_prefix)
+    if max_queue:
+        reader = reader.option("maxQueue", max_queue)
     return reader.load()
 
 
+#: spec ``type`` -> builder, called as ``builder(spark, **options)``.
+SOURCE_BUILDERS = {
+    "devzero": devzero_source,
+    "dirwatch": dirwatch_source,
+    "dirwatch_offsets": dirwatch_source_with_offsets,
+    "kafka": kafka_source,
+    "http_push": http_push_source,
+    "json": json_source,
+    "csv": csv_source,
+}
+
+
 def build_source(spark: SparkSession, cfg: dict) -> DataFrame:
-    """Instantiate a source from a pipeline-spec section (type + options)."""
-    stype = cfg.get("type")
-    if stype not in _SOURCE_BUILDERS:
-        raise ValueError(f"unknown source type {stype!r}; known: {sorted(_SOURCE_BUILDERS)}")
-    return _SOURCE_BUILDERS[stype](spark, cfg)
+    """Instantiate a source from a pipeline-spec section."""
+    return bind_component("source", SOURCE_BUILDERS, cfg)(spark)

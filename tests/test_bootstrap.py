@@ -160,6 +160,21 @@ def test_load_spec_unknown_fqcn_raises(tmp_path):
         load_spec(str(conf))
 
 
+def test_fqcn_types_are_registered():
+    from atiesh_spark.bootstrap import _FQCN_TYPES
+    from atiesh_spark.streaming.interceptors import INTERCEPTOR_BUILDERS
+    from atiesh_spark.streaming.sinks import SINK_BUILDERS
+    from atiesh_spark.streaming.sources import SOURCE_BUILDERS
+
+    registries = {
+        "source": SOURCE_BUILDERS,
+        "interceptor": INTERCEPTOR_BUILDERS,
+        "sink": SINK_BUILDERS,
+    }
+    for fqcn, ctype in _FQCN_TYPES.items():
+        assert ctype in registries[fqcn.split(".")[1]], fqcn
+
+
 def test_assemble_validates_wiring(spark, tmp_path):
     conf = tmp_path / "atiesh.conf"
     conf.write_text(

@@ -195,6 +195,44 @@ def test_spec_validation_errors(spark):
     with pytest.raises(ValueError, match="no pipelines"):
         Pipeline(spark, {"sources": {}, "sinks": {}, "pipelines": []})
 
+    # every component binds against its builder's signature at assembly:
+    # an unknown type, option or pipeline key fails before any query starts
+    def spec():
+        return {
+            "sources": {"in": {"type": "dirwatch", "path": "/nonexistent"}},
+            "interceptors": {"norm": {"type": "normalize", "priority": 5}},
+            "sinks": {"out": {"type": "http", "url": "http://x", "accept": "true"}},
+            "pipelines": [
+                {"source": "in", "interceptors": ["norm"], "sinks": ["out"], "checkpoint": "/c"}
+            ],
+        }
+
+    Pipeline(spark, spec())
+    cases = [
+        ("sources", "in", "max_file_per_trigger", 2, "source 'in'.*'max_file_per_trigger'.*options"),
+        ("interceptors", "norm", "colum", "value", "interceptor 'norm'.*'colum'.*options"),
+        ("sinks", "out", "max_retriez", 5, "sink 'out'.*'max_retriez'.*options"),
+        ("sources", "in", "type", "dirwatchh", "source 'in'.*'dirwatchh'.*known"),
+        ("interceptors", "norm", "type", "normalise", "interceptor 'norm'.*'normalise'.*known"),
+        ("sinks", "out", "type", "kafka", "sink 'out'.*'kafka'.*known"),
+    ]
+    for section, name, key, value, match in cases:
+        bad = spec()
+        bad[section][name][key] = value
+        with pytest.raises(ValueError, match=match):
+            Pipeline(spark, bad)
+    bad = spec()
+    bad["pipelines"][0]["checkpiont"] = bad["pipelines"][0].pop("checkpoint")
+    with pytest.raises(ValueError, match=r"pipeline\[0\].*'checkpiont'.*known"):
+        Pipeline(spark, bad)
+
+
+def test_sink_spec_options_reach_writer():
+    from atiesh_spark.pipeline import build_sink_writer
+
+    w = build_sink_writer({"type": "http", "url": "http://x", "timeout": 30, "query_key": "q"})
+    assert (w.timeout, w.query_key) == (30, "q")
+
 
 def test_json_file_source_pipeline(spark, tmp_path):
     """Schema'd JSON file source -> canonical events with header capture."""
