@@ -5,9 +5,12 @@ Each writer is a callable ``(batch_df, batch_id) -> None`` usable inside
 Commit/Transaction ack — the batch completes only when the writer
 returns, giving at-least-once into external systems).
 
-External-protocol writers (HTTP, syslog) take injectable transports so
-the retry/format logic is unit-testable without a network; per-partition
-execution keeps connections executor-side (no driver collect).
+External-protocol writers (HTTP, syslog, log service) take injectable
+transports so the retry/format logic is unit-testable without a
+network. All three deliver through one per-partition function,
+``deliver_partition``: connections stay executor-side, each partition
+reports success/dropped/failure row counts, and any failed partition
+fails the batch from the driver.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ from __future__ import annotations
 import base64
 import gzip as _gzip
 import inspect
+import itertools
 import random
 import socket
 import time
@@ -117,6 +121,102 @@ def kafka_sink_options(bootstrap_servers: str, must_send: bool = False) -> dict[
     return opts
 
 
+# --- external sinks: one per-partition delivery loop --------------------------
+
+
+def deliver_partition(
+    rows: Iterable[tuple],
+    open_sender: Callable[[], tuple[Callable[[list[tuple]], object], Callable[[], None]]],
+    group_size: int | None,
+) -> tuple[int, int, int, str | None]:
+    """Send one partition's rows through one sender and return its
+    ``(ok, dropped, failed, err)`` row counts.
+
+    Rows go out in groups of ``group_size`` (``None``: the whole
+    partition is one group). ``open_sender()`` gives ``(send, close)``;
+    it runs at the first group, so an empty partition opens nothing, and
+    ``close`` always runs. A group counts as dropped when ``send``
+    returns ``"dropped"`` and as ok otherwise. A raise from opening or
+    sending counts the group as failed, records ``err`` and aborts the
+    partition's remaining sends.
+    """
+    ok = dropped = failed = 0
+    err = None
+    rows = iter(rows)
+    close = None
+    try:
+        while group := list(itertools.islice(rows, group_size)):
+            try:
+                if close is None:
+                    send, close = open_sender()
+                outcome = send(group)
+            except Exception as exc:  # abort the partition, report the outcome
+                failed, err = len(group), repr(exc)
+                break
+            if outcome == "dropped":
+                dropped += len(group)
+            else:
+                ok += len(group)
+    finally:
+        if close is not None:
+            close()
+    return ok, dropped, failed, err
+
+
+class _DeliveringWriter:
+    """A ``(batch_df, batch_id)`` writer whose rows leave Spark through
+    ``deliver_partition``, with the reference's SinkMetrics counters
+    (success / dropped / failure, in rows).
+
+    Subclasses set ``group_size`` and give ``open() -> (send, close)``;
+    ``_rows`` selects the columns a sender reads, as row tuples.
+
+    Partitions run on the executors over Arrow batches (no row-at-a-time
+    pickling) and each returns one counter row to the driver, never the
+    data rows. A failed partition fails the batch from the driver, after
+    every partition has reported and the counters are added, so the
+    batch replays from the checkpoint (at-least-once), as the
+    reference's transaction nack does.
+    """
+
+    group_size: int | None = 1
+
+    def __init__(self) -> None:
+        self.success_count = 0
+        self.dropped_count = 0
+        self.failure_count = 0
+
+    def _rows(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.select(F.col("value").cast("string")).dropna()
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        open_sender, group_size = self.open, self.group_size
+
+        def run(pdfs) -> Iterable:
+            import pandas as pd
+
+            rows = (row for pdf in pdfs for row in pdf.itertuples(index=False, name=None))
+            ok, dropped, failed, err = deliver_partition(rows, open_sender, group_size)
+            yield pd.DataFrame(
+                {"ok": [ok], "dropped": [dropped], "failed": [failed], "err": [err]}
+            )
+
+        stats = (
+            self._rows(batch_df)
+            .mapInPandas(run, "ok long, dropped long, failed long, err string")
+            .collect()
+        )
+        self.success_count += sum(s["ok"] for s in stats)
+        self.dropped_count += sum(s["dropped"] for s in stats)
+        self.failure_count += sum(s["failed"] for s in stats)
+        errs = [s["err"] for s in stats if s["err"] is not None]
+        if errs:
+            raise RuntimeError(
+                f"{type(self).__name__} failed in {len(errs)} of {len(stats)} "
+                f"partitions: {errs[0]}"
+            )
+
+
 # --- HTTP sink ---------------------------------------------------------------
 
 
@@ -179,7 +279,7 @@ class PersistentHttpTransport:
         self._conns.clear()
 
 
-class HttpSinkWriter:
+class HttpSinkWriter(_DeliveringWriter):
     """HTTP writer with the reference's request/retry semantics.
 
     Mirrors HttpSink.scala:55-315 + HttpLimitRequestSinkSemantics:
@@ -191,7 +291,7 @@ class HttpSinkWriter:
     - basic auth via precomputed Authorization header
       (HttpSink.scala:118-143)
     - response policy (HttpSink.scala:270-310): 200/201 done; other
-      4xx drop (log + counter); 5xx/transport error retry with
+      4xx drop (``dropped_count``); 5xx/transport error retry with
       backoff min(2^n + rand(0,1), 32)s up to ``max_retries``
       (HttpLimitRequestSinkSemantics.scala:123-141)
     - bounded in-flight requests become the micro-batch barrier; the
@@ -215,6 +315,7 @@ class HttpSinkWriter:
         transport: Callable[..., tuple[int, bytes]] | None = None,
         sleeper: Callable[[float], None] = time.sleep,
     ) -> None:
+        super().__init__()
         if method not in ("POST", "PUT", "GET"):
             raise ValueError(f"unsupported method {method!r}")
         if method == "GET" and use_gzip:
@@ -224,7 +325,7 @@ class HttpSinkWriter:
             raise ValueError("gzip is only valid for body-carrying methods (POST/PUT)")
         self.url = url
         self.method = method
-        self.batch_size = batch_size
+        self.group_size = batch_size or 1
         self.use_gzip = use_gzip
         self.content_type = content_type
         self.query_key = query_key
@@ -271,35 +372,20 @@ class HttpSinkWriter:
             self.sleeper(delay)
             attempt += 1
 
-    def _send_partition(self, values: Iterable[str]) -> None:
-        # connection reuse: when no transport was injected, the whole
-        # partition shares one persistent keep-alive connection instead
-        # of a fresh TCP handshake per request (the dominant cost at any
-        # real send rate; mirrors HttpSinkSemantics.scala:121-190)
-        owned = None if self.transport is not None else PersistentHttpTransport()
-        transport = self.transport or owned
-        try:
-            if self.batch_size is None:
-                for v in values:
-                    self._send(v, transport)
-                return
-            buf: list[str] = []
-            for v in values:
-                buf.append(v)
-                if len(buf) >= self.batch_size:
-                    self._send("\n".join(buf), transport)
-                    buf.clear()
-            if buf:
-                self._send("\n".join(buf), transport)
-        finally:
-            if owned is not None:
-                owned.close()
+    def open(self) -> tuple[Callable[[list[tuple]], str], Callable[[], None]]:
+        # with no injected transport the whole partition shares one
+        # keep-alive connection instead of a TCP handshake per request
+        # (the dominant cost at any real send rate)
+        if self.transport is not None:
+            transport, close = self.transport, lambda: None
+        else:
+            transport = PersistentHttpTransport()
+            close = transport.close
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        send_partition = self._send_partition
-        batch_df.select(F.col("value").cast("string")).foreachPartition(
-            lambda rows: send_partition(r[0] for r in rows if r[0] is not None)
-        )
+        def send(group: list[tuple]) -> str:
+            return self._send("\n".join(value for (value,) in group), transport)
+
+        return send, close
 
 
 # --- syslog sink -------------------------------------------------------------
@@ -309,6 +395,11 @@ _SEVERITIES = {
     "emerg": 0, "alert": 1, "crit": 2, "err": 3,
     "warning": 4, "notice": 5, "info": 6, "debug": 7,
 }
+
+
+def _one_of(name: str, value: object, choices: Iterable[str]) -> None:
+    if value not in choices:
+        raise ValueError(f"{name} must be {'|'.join(choices)}, got {value!r}")
 
 
 def format_syslog(
@@ -334,13 +425,14 @@ def format_syslog(
 
 
 def udp_syslog_sender(host: str, port: int):
+    """Datagram transport: ``(send(bytes), close)``."""
     sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
     addr = (host, port)
 
     def send(b: bytes) -> None:
         sock.sendto(b, addr)
 
-    return send
+    return send, sock.close
 
 
 def octet_count_frame(b: bytes) -> bytes:
@@ -350,8 +442,8 @@ def octet_count_frame(b: bytes) -> bytes:
 
 def tcp_syslog_sender(host: str, port: int, use_tls: bool = False,
                       cafile: str | None = None, framing: str = "lf"):
-    """Stream transport; TLS via stdlib ssl (covers the reference's
-    TCP/TLS sender variants + CA-cert option,
+    """Stream transport: ``(send(bytes), close)``; TLS via stdlib ssl
+    (covers the reference's TCP/TLS sender variants + CA-cert option,
     SyslogSinkSemantics.scala:49-135, PKI.scala:20-74).
 
     Framing: 'lf' (RFC 6587 non-transparent, the default — matching the
@@ -361,8 +453,7 @@ def tcp_syslog_sender(host: str, port: int, use_tls: bool = False,
     and transport compose freely, like the reference's format x sender
     matrix.
     """
-    if framing not in ("lf", "octet"):
-        raise ValueError(f"framing must be lf|octet, got {framing!r}")
+    _one_of("framing", framing, ("lf", "octet"))
     sock = socket.create_connection((host, port), timeout=10)
     if use_tls:
         import ssl
@@ -374,23 +465,25 @@ def tcp_syslog_sender(host: str, port: int, use_tls: bool = False,
     def send(b: bytes) -> None:
         sock.sendall(octet_count_frame(b) if octet else b + b"\n")
 
-    return send
+    return send, sock.close
 
 
-class SyslogSinkWriter:
+class SyslogSinkWriter(_DeliveringWriter):
     """Sends each event body as one syslog message.
 
     Reference ships 8 transport variants (RFC x TCP/UDP/TLS,
     SyslogSinkSemantics.scala:19-42); here framing (RFC 3164/5424) and
     transport (udp/tcp/tls senders above, or any injected
-    ``sender(bytes)``) compose to the same matrix.
+    ``sender(bytes)``) compose to the same matrix. ``rfc`` may be a str
+    or an int (HOCON reads ``rfc = 5424`` as a number); every choice is
+    checked here, so a bad one fails before any query starts.
     """
 
     def __init__(
         self,
         host: str = "localhost",
         port: int = 514,
-        rfc: str = "3164",
+        rfc: str | int = "3164",
         facility: str = "user",
         severity: str = "info",
         appname: str = "atiesh",
@@ -400,6 +493,13 @@ class SyslogSinkWriter:
         framing: str = "lf",
         sender: Callable[[bytes], None] | None = None,
     ) -> None:
+        super().__init__()
+        rfc = str(rfc)
+        _one_of("rfc", rfc, ("3164", "5424"))
+        _one_of("facility", facility, _FACILITIES)
+        _one_of("severity", severity, _SEVERITIES)
+        _one_of("transport", transport, ("udp", "tcp"))
+        _one_of("framing", framing, ("lf", "octet"))
         self.host, self.port = host, port
         self.rfc, self.facility, self.severity = rfc, facility, severity
         self.appname = appname
@@ -407,32 +507,28 @@ class SyslogSinkWriter:
         self.framing = framing
         self.sender = sender
 
-    def _make_sender(self) -> Callable[[bytes], None]:
+    def open(self) -> tuple[Callable[[list[tuple]], None], Callable[[], None]]:
         if self.sender is not None:
-            return self.sender
-        if self.transport == "tcp" or self.use_tls:
-            return tcp_syslog_sender(
+            raw, close = self.sender, lambda: None
+        elif self.transport == "tcp" or self.use_tls:
+            raw, close = tcp_syslog_sender(
                 self.host, self.port, self.use_tls, self.cafile, self.framing
             )
-        return udp_syslog_sender(self.host, self.port)
+        else:
+            raw, close = udp_syslog_sender(self.host, self.port)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        rfc, fac, sev, app = self.rfc, self.facility, self.severity, self.appname
-        make_sender = self._make_sender
+        def send(group: list[tuple]) -> None:
+            for (value,) in group:
+                raw(format_syslog(value, rfc=self.rfc, facility=self.facility,
+                                  severity=self.severity, appname=self.appname))
 
-        def send_rows(rows) -> None:
-            send = make_sender()
-            for r in rows:
-                if r[0] is not None:
-                    send(format_syslog(r[0], rfc=rfc, facility=fac, severity=sev, appname=app))
-
-        batch_df.select(F.col("value").cast("string")).foreachPartition(send_rows)
+        return send, close
 
 
 # --- log-service (SLS-shaped) sink -------------------------------------------
 
 
-class LogServiceSinkWriter:
+class LogServiceSinkWriter(_DeliveringWriter):
     """Log-service producer in the shape of AliyunSLSSinkSemantics
     (AliyunSLSSinkSemantics.scala:89-214): events become (topic, source,
     shard_key, fields) records, sent singly or as one grouped batch per
@@ -442,14 +538,6 @@ class LogServiceSinkWriter:
     (raises on failure; must be picklable — it runs inside partition
     tasks) — the reference likewise ships semantics only, no concrete
     component (SURVEY.md §2.4).
-
-    Scale shape: record building and client sends run per partition on
-    the executors via Arrow-batched ``mapInPandas`` (no RDD hop — rows
-    never round-trip through row-at-a-time Python pickling); only one
-    (ok, failed, err) counter row per partition returns to the driver —
-    never the data rows. A failed group aborts its partition's remaining
-    sends; the driver then raises to fail the batch -> checkpoint replay
-    (at-least-once), mirroring the reference's transaction-nack path.
     """
 
     def __init__(
@@ -460,65 +548,30 @@ class LogServiceSinkWriter:
         shard_key_header: str | None = None,
         grouped: bool = True,
     ) -> None:
+        super().__init__()
         self.client = client
         self.topic, self.source = topic, source
         self.shard_key_header = shard_key_header
-        self.grouped = grouped
-        self.success_count = 0
-        self.failure_count = 0
+        self.group_size = None if grouped else 1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        client, grouped = self.client, self.grouped
-        topic, source, skh = self.topic, self.source, self.shard_key_header
+    def _rows(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.select("value", "headers")
 
-        def send_partition(pdfs) -> Iterable:
-            import pandas as pd
+    def open(self) -> tuple[Callable[[list[tuple]], None], Callable[[], None]]:
+        def record(value: str, headers: dict | None) -> dict:
+            headers = headers or {}
+            skh = self.shard_key_header
+            return {
+                "topic": self.topic,
+                "source": self.source,
+                "shard_key": headers.get(skh) if skh else None,
+                "fields": {"value": value, **headers},
+            }
 
-            # one send pass per PARTITION, not per Arrow batch: grouped
-            # mode's contract is one group per partition, so records
-            # accumulate across the iterator before sending (the same
-            # buffering the per-partition group build always needed)
-            records = []
-            for pdf in pdfs:
-                for value, headers in zip(pdf["value"], pdf["headers"]):
-                    headers = headers or {}
-                    records.append(
-                        {
-                            "topic": topic,
-                            "source": source,
-                            "shard_key": headers.get(skh) if skh else None,
-                            "fields": {"value": value, **headers},
-                        }
-                    )
-            n_ok = n_fail = 0
-            err: str | None = None
-            groups = [records] if grouped else [[r] for r in records]
-            for group in groups:
-                if not group:
-                    continue
-                try:
-                    client(group)
-                    n_ok += len(group)
-                except Exception as exc:  # abort partition, report outcome
-                    n_fail += len(group)
-                    err = repr(exc)
-                    break
-            yield pd.DataFrame({"ok": [n_ok], "fail": [n_fail], "err": [err]})
+        def send(group: list[tuple]) -> None:
+            self.client([record(*row) for row in group])
 
-        # O(num_partitions) counter rows — not data — come back to the
-        # driver; the exception is re-raised driver-side so the counter
-        # updates survive (executor-raised errors would fail the task
-        # before its counters ship).
-        stats = (
-            batch_df.select("value", "headers")
-            .mapInPandas(send_partition, "ok long, fail long, err string")
-            .collect()
-        )
-        self.success_count += sum(s["ok"] for s in stats)
-        self.failure_count += sum(s["fail"] for s in stats)
-        errs = [s["err"] for s in stats if s["err"] is not None]
-        if errs:
-            raise RuntimeError(f"log service sink failed: {errs[0]}")
+        return send, lambda: None
 
 
 # --- registry ----------------------------------------------------------------

@@ -124,130 +124,6 @@ def stateful_count_batcher(
     )
 
 
-class _CountBatchProcessor:
-    """transformWithState processor for the count/timeout batcher.
-
-    The Spark 4 successor to applyInPandasWithState: typed state
-    primitives (ListState for the buffer, ValueState for the open
-    timestamp) and EXPLICIT absolute-time timers — the timeout anchor is
-    registered once when a buffer opens (opened_at + timeout), so a
-    steady trickle of events cannot postpone the flush (the GroupState
-    version must re-derive the remaining time every trigger instead).
-    Same output contract as ``stateful_count_batcher``.
-    """
-
-    def __init__(self, batch_size: int, timeout_ms: int) -> None:
-        self.batch_size = batch_size
-        self.timeout_ms = timeout_ms
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._buf = handle.getListState("buffered", "value STRING")
-        self._opened = handle.getValueState("opened_at", "ts LONG")
-
-    def _flush_rows(self, tag: str, chunk: list[str], reason: str) -> pd.DataFrame:
-        return pd.DataFrame(
-            [{"tag": tag, "body": "\n".join(chunk),
-              "n_events": len(chunk), "flush_reason": reason}],
-            columns=["tag", "body", "n_events", "flush_reason"],
-        )
-
-    def _disarm(self) -> None:
-        for expiry in list(self._handle.listTimers()):
-            self._handle.deleteTimer(expiry)
-
-    def handleInputRows(self, key, rows, timerValues):
-        tag = key[0]
-        buffered = [r[0] for r in self._buf.get()]
-        for pdf in rows:
-            buffered.extend(pdf["value"].astype(str).tolist())
-        while self.batch_size > 0 and len(buffered) >= self.batch_size:
-            chunk, buffered = buffered[: self.batch_size], buffered[self.batch_size :]
-            yield self._flush_rows(tag, chunk, "size")
-            # a size flush closes the open buffer: the next leftover
-            # re-opens it (and re-anchors the timeout) below
-            self._opened.clear()
-            self._disarm()
-        if buffered:
-            self._buf.clear()
-            self._buf.put([(v,) for v in buffered])
-            if not self._opened.exists():
-                now_ms = timerValues.getCurrentProcessingTimeInMs()
-                self._opened.update((now_ms,))
-                if self.timeout_ms > 0:
-                    # one absolute timer per open buffer — no per-trigger
-                    # re-arming, trickle-proof by construction
-                    self._handle.registerTimer(now_ms + self.timeout_ms)
-        else:
-            self._buf.clear()
-            self._opened.clear()
-            self._disarm()
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        tag = key[0]
-        buffered = [r[0] for r in self._buf.get()]
-        if buffered:
-            yield self._flush_rows(tag, buffered, "timeout")
-        self._buf.clear()
-        self._opened.clear()
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass  # no initial state seeding for the batcher
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_count_batcher_tws(
-    events: DataFrame,
-    tag_col: str = "tag",
-    value_col: str = "value",
-    batch_size: int = 0,
-    timeout_ms: int = 0,
-) -> DataFrame:
-    """``stateful_count_batcher`` on the Spark 4 transformWithState API.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) — transformWithState does
-    not run on the default HDFS-backed store — and the ``protobuf``
-    package (the state-server wire protocol; absent in this container,
-    so the runtime path raises a clear error here and is covered by the
-    processor-level unit tests instead). Validation mirrors
-    BatchSinkSemantics.scala:135-146.
-    """
-    if batch_size == 1:
-        raise ValueError("batch_size 1 is rejected (use the plain sink path)")
-    if batch_size <= 0 and timeout_ms <= 0:
-        raise ValueError("need batch_size > 1 and/or timeout_ms > 0")
-    try:
-        import google.protobuf  # noqa: F401  (transformWithState wire protocol)
-    except ImportError as exc:
-        raise RuntimeError(
-            "stateful_count_batcher_tws needs the protobuf package "
-            "(transformWithState state-server protocol); use "
-            "stateful_count_batcher (applyInPandasWithState) where "
-            "protobuf is unavailable"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass dynamically so importing this module never hard-depends
-    # on the Spark 4 API surface at definition time
-    proc_cls = type(
-        "CountBatchProcessor", (_CountBatchProcessor, StatefulProcessor), {}
-    )
-    shaped = events.select(
-        F.col(tag_col).cast("string").alias("tag"),
-        F.col(value_col).cast("string").alias("value"),
-    )
-    return shaped.groupBy("tag").transformWithStateInPandas(
-        statefulProcessor=proc_cls(batch_size, timeout_ms),
-        outputStructType=BATCH_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="ProcessingTime",
-    )
-
-
 def streaming_dedup(
     events: DataFrame,
     key_cols: list[str],

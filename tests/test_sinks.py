@@ -3,12 +3,14 @@ framing, kafka frame shaping — reference edge cases from SURVEY.md §5.2."""
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 
 import pytest
 
 from atiesh_spark.streaming.sinks import (
     HttpSinkWriter,
+    deliver_partition,
     format_syslog,
     kafka_sink_frame,
     kafka_sink_options,
@@ -93,7 +95,7 @@ def test_http_get_carries_query_param():
 def test_http_batch_join():
     t = FakeTransport([200, 200])
     w = make_writer(t, batch_size=2)
-    w._send_partition(iter(["a", "b", "c"]))
+    deliver_partition(iter([("a",), ("b",), ("c",)]), w.open, w.group_size)
     assert t.calls[0]["body"] == b"a\nb"
     assert t.calls[1]["body"] == b"c"
 
@@ -260,13 +262,16 @@ def test_logservice_never_collects_rows(spark, tmp_path, monkeypatch):
 
 
 def test_logservice_writer_has_no_rdd_hop():
-    """The writer must stay on the Arrow-batched DataFrame path: a .rdd
-    hop deserializes every row to Python one at a time."""
+    """Every sink writer stays on the one Arrow-batched DataFrame path: a
+    .rdd hop or a foreachPartition call deserializes every row to Python
+    one at a time."""
     import inspect
 
-    from atiesh_spark.streaming.sinks import LogServiceSinkWriter
+    from atiesh_spark.streaming import sinks
 
-    assert ".rdd" not in inspect.getsource(LogServiceSinkWriter)
+    source = inspect.getsource(sinks)
+    assert ".rdd" not in source
+    assert "foreachPartition" not in source
 
 
 def test_syslog_tcp_sender_framing():
@@ -290,9 +295,10 @@ def test_syslog_tcp_sender_framing():
 
     t = threading.Thread(target=accept, daemon=True)
     t.start()
-    send = tcp_syslog_sender("127.0.0.1", port)
+    send, close = tcp_syslog_sender("127.0.0.1", port)
     send(b"<14>msg")
     t.join(timeout=5)
+    close()
     srv.close()
     assert got == [b"<14>msg\n"]
 
@@ -320,9 +326,10 @@ def test_syslog_tcp_octet_count_framing():
 
     t = threading.Thread(target=accept, daemon=True)
     t.start()
-    send = tcp_syslog_sender("127.0.0.1", port, framing="octet")
+    send, close = tcp_syslog_sender("127.0.0.1", port, framing="octet")
     send(b"<14>hello")
     t.join(timeout=5)
+    close()
     srv.close()
     assert got == [b"9 <14>hello"]
 
@@ -334,14 +341,13 @@ def test_syslog_framing_validation():
         tcp_syslog_sender("127.0.0.1", 1, framing="auto")
 
 
-def test_http_persistent_transport_reuses_connection():
-    """All requests in a partition must ride one keep-alive connection
-    (reference pool semantics) — counted via distinct client ports on a
-    live HTTP/1.1 server."""
+@contextlib.contextmanager
+def loopback_http(status=200):
+    """A live HTTP/1.1 (keep-alive) server answering every POST with
+    ``status``; yields ``(url, peers)``, ``peers`` holding each request's
+    client address."""
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    from atiesh_spark.streaming.sinks import PersistentHttpTransport
 
     peers = []
 
@@ -352,7 +358,7 @@ def test_http_persistent_transport_reuses_connection():
             peers.append(self.client_address)
             n = int(self.headers.get("Content-Length", 0))
             self.rfile.read(n)
-            self.send_response(200)
+            self.send_response(status)
             self.send_header("Content-Length", "0")
             self.end_headers()
 
@@ -360,53 +366,36 @@ def test_http_persistent_transport_reuses_connection():
             pass
 
     srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = srv.server_address[1]
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
-        tr = PersistentHttpTransport()
-        for i in range(5):
-            status, _ = tr(
-                "POST", f"http://127.0.0.1:{port}/ingest", b"x",
-                {"Content-Type": "text/plain"}, 5.0,
-            )
-            assert status == 200
-        tr.close()
+        yield f"http://127.0.0.1:{srv.server_address[1]}/ingest", peers
     finally:
         srv.shutdown()
+        srv.server_close()
+
+
+def test_http_persistent_transport_reuses_connection():
+    """All requests in a partition must ride one keep-alive connection
+    (reference pool semantics) — counted via distinct client ports on a
+    live HTTP/1.1 server."""
+    from atiesh_spark.streaming.sinks import PersistentHttpTransport
+
+    with loopback_http() as (url, peers):
+        tr = PersistentHttpTransport()
+        for i in range(5):
+            status, _ = tr("POST", url, b"x", {"Content-Type": "text/plain"}, 5.0)
+            assert status == 200
+        tr.close()
     assert len(peers) == 5
     assert len({p[1] for p in peers}) == 1  # one client port == one connection
 
 
 def test_http_writer_uses_one_connection_per_partition():
-    """HttpSinkWriter._send_partition with no injected transport opens a
+    """An HttpSinkWriter sender with no injected transport opens a
     single persistent connection for the whole partition."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    peers = []
-
-    class Handler(BaseHTTPRequestHandler):
-        protocol_version = "HTTP/1.1"
-
-        def do_POST(self):
-            peers.append(self.client_address)
-            n = int(self.headers.get("Content-Length", 0))
-            self.rfile.read(n)
-            self.send_response(200)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
-
-        def log_message(self, *a):
-            pass
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = srv.server_address[1]
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        w = HttpSinkWriter(f"http://127.0.0.1:{port}/ingest")
-        w._send_partition(iter(["a", "b", "c"]))
-    finally:
-        srv.shutdown()
+    with loopback_http() as (url, peers):
+        w = HttpSinkWriter(url)
+        deliver_partition(iter([("a",), ("b",), ("c",)]), w.open, w.group_size)
     assert len(peers) == 3
     assert len({p[1] for p in peers}) == 1
 
@@ -423,3 +412,54 @@ def test_kafka_source_missing_connector_message(spark):
 def test_http_get_with_gzip_rejected():
     with pytest.raises(ValueError, match="gzip is only valid"):
         HttpSinkWriter("http://x", method="GET", use_gzip=True)
+
+
+@pytest.mark.parametrize(
+    "status, max_retries, outcome",
+    [(404, 3, "dropped"), (503, 0, "failed")],
+    ids=["4xx_dropped", "5xx_failed"],
+)
+def test_http_writer_reports_outcome_counts(spark, status, max_retries, outcome):
+    """Every request gets ``status`` from a live loopback server: a 4xx
+    drop is counted and the batch completes; exhausted retries are
+    counted and fail the batch from the driver."""
+    df = spark.createDataFrame([(f"e{i}",) for i in range(6)], "value string").repartition(2)
+    with loopback_http(status) as (url, _):
+        w = HttpSinkWriter(url, max_retries=max_retries)
+        if outcome == "dropped":
+            w(df, 0)
+            assert w.dropped_count == 6
+            assert w.success_count == 0 and w.failure_count == 0
+        else:
+            with pytest.raises(RuntimeError, match="HttpSinkWriter failed.*exhausted 0 retries"):
+                w(df, 0)
+            assert w.failure_count > 0
+
+
+@pytest.mark.parametrize(
+    "option, error",
+    [
+        ("rfc = 5424", None),  # HOCON reads a bare 5424 as an int
+        ('rfc = "5425"', r"rfc must be 3164\|5424, got '5425'"),
+        ("facility = local9", "facility must be .*, got 'local9'"),
+        ("severity = warn", "severity must be .*, got 'warn'"),
+        ("transport = tcpp", r"transport must be udp\|tcp, got 'tcpp'"),
+        ("framing = auto", r"framing must be lf\|octet, got 'auto'"),
+    ],
+    ids=["int_rfc", "rfc", "facility", "severity", "transport", "framing"],
+)
+def test_syslog_options_checked_when_built(option, error):
+    """Syslog options from a spec are checked when the writer is built,
+    so a bad one fails before any query starts, not in executor tasks."""
+    from atiesh_spark.bootstrap import parse_hocon
+    from atiesh_spark.pipeline import build_sink_writer
+
+    cfg = parse_hocon(f"type = syslog\n{option}")
+    if error is not None:
+        with pytest.raises(ValueError, match=error):
+            build_sink_writer(cfg)
+        return
+    got = []
+    w = build_sink_writer({**cfg, "sender": got.append})
+    assert deliver_partition(iter([("hi",)]), w.open, w.group_size) == (1, 0, 0, None)
+    assert got[0].startswith(b"<14>1 ") and got[0].endswith(b" - - - hi")

@@ -97,148 +97,6 @@ def test_timeout_flush_drains_partial_batches(spark, tmp_path):
         q.stop()
 
 
-def test_tws_batcher_validation():
-    from atiesh_spark.streaming.stateful import stateful_count_batcher_tws
-
-    with pytest.raises(ValueError, match="batch_size 1"):
-        stateful_count_batcher_tws(None, batch_size=1)
-    with pytest.raises(ValueError, match="batch_size > 1 and/or timeout_ms"):
-        stateful_count_batcher_tws(None, batch_size=0, timeout_ms=0)
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_tws_requires_protobuf_with_clear_error(spark):
-    """Without protobuf the TWS wrapper must fail actionably (pointing at
-    the applyInPandasWithState fallback), not with a worker stack trace."""
-    from atiesh_spark.streaming.stateful import stateful_count_batcher_tws
-
-    if _has_protobuf():
-        pytest.skip("protobuf present: runtime path available")
-    df = spark.createDataFrame([("a", "1")], "tag string, value string")
-    with pytest.raises(RuntimeError, match="protobuf"):
-        stateful_count_batcher_tws(df, batch_size=2, timeout_ms=1000)
-
-
-# --- processor-logic tests (no state server needed): drive the
-# transformWithState handler with fake typed-state primitives ---------------
-
-
-class _FakeListState:
-    def __init__(self):
-        self.rows = []
-
-    def get(self):
-        return iter(self.rows)
-
-    def put(self, rows):
-        self.rows = list(rows)
-
-    def clear(self):
-        self.rows = []
-
-
-class _FakeValueState:
-    def __init__(self):
-        self.v = None
-
-    def exists(self):
-        return self.v is not None
-
-    def get(self):
-        return self.v
-
-    def update(self, v):
-        self.v = v
-
-    def clear(self):
-        self.v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.lists, self.values, self.timers = {}, {}, []
-
-    def getListState(self, name, schema):
-        return self.lists.setdefault(name, _FakeListState())
-
-    def getValueState(self, name, schema):
-        return self.values.setdefault(name, _FakeValueState())
-
-    def registerTimer(self, expiry):
-        self.timers.append(expiry)
-
-    def deleteTimer(self, expiry):
-        self.timers.remove(expiry)
-
-    def listTimers(self):
-        return list(self.timers)
-
-
-class _FakeTimerValues:
-    def __init__(self, now_ms):
-        self.now_ms = now_ms
-
-    def getCurrentProcessingTimeInMs(self):
-        return self.now_ms
-
-
-def _drive(proc, key, values, now_ms):
-    import pandas as pd
-
-    return list(
-        proc.handleInputRows(key, iter([pd.DataFrame({"value": values})]),
-                             _FakeTimerValues(now_ms))
-    )
-
-
-def test_tws_processor_size_flush_and_timer_anchor():
-    from atiesh_spark.streaming.stateful import _CountBatchProcessor
-
-    proc = _CountBatchProcessor(batch_size=3, timeout_ms=5_000)
-    h = _FakeHandle()
-    proc.init(h)
-
-    out = _drive(proc, ("a",), ["1", "2", "3", "4"], now_ms=1_000)
-    assert len(out) == 1
-    flush = out[0].iloc[0]
-    assert flush["body"] == "1\n2\n3" and flush["flush_reason"] == "size"
-    # leftover '4' re-opened the buffer: one absolute timer at open+timeout
-    assert h.timers == [6_000]
-    assert [r[0] for r in h.lists["buffered"].rows] == ["4"]
-
-    # a trickle of sub-batch-size events must NOT re-anchor the timer
-    out = _drive(proc, ("a",), ["5"], now_ms=3_000)
-    assert out == [] or all(df.empty for df in out)
-    assert h.timers == [6_000]
-
-    # timer fires: leftovers drain with reason=timeout, state clears
-    out = list(proc.handleExpiredTimer(("a",), _FakeTimerValues(6_001), None))
-    flush = out[0].iloc[0]
-    assert flush["body"] == "4\n5" and flush["flush_reason"] == "timeout"
-    assert h.lists["buffered"].rows == []
-    assert not h.values["opened_at"].exists()
-
-
-def test_tws_processor_exact_multiple_leaves_no_timer():
-    from atiesh_spark.streaming.stateful import _CountBatchProcessor
-
-    proc = _CountBatchProcessor(batch_size=2, timeout_ms=5_000)
-    h = _FakeHandle()
-    proc.init(h)
-    out = _drive(proc, ("a",), ["1", "2", "3", "4"], now_ms=1_000)
-    assert [df.iloc[0]["body"] for df in out] == ["1\n2", "3\n4"]
-    # nothing buffered -> no timer armed, no state kept
-    assert h.timers == [] and h.lists["buffered"].rows == []
-
-
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Late-data policy per Spark's split-watermark contract
     (SPARK-24634): the late-event filter uses the PREVIOUS batch's
