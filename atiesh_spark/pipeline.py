@@ -121,6 +121,10 @@ class Pipeline:
         return fanout
 
     def start(self) -> list[StreamingQuery]:
+        """Build every pipeline's source, interceptor chain and sink
+        writers first, then start the queries: a bad value anywhere in
+        the spec raises before any query is running."""
+        writers = []
         for i, pipe in enumerate(self.spec["pipelines"]):
             df = build_source(self.spark, self.spec["sources"][pipe["source"]])
             chain = [self.spec["interceptors"][n] for n in pipe.get("interceptors", [])]
@@ -132,7 +136,8 @@ class Pipeline:
             if "checkpoint" in pipe:
                 writer = writer.option("checkpointLocation", pipe["checkpoint"])
             name = pipe.get("name", f"atiesh-pipeline-{i}")
-            self._queries.append(writer.queryName(name).start())
+            writers.append(writer.queryName(name))
+        self._queries.extend(w.start() for w in writers)
         return self._queries
 
     def await_all(self, timeout: float | None = None) -> None:

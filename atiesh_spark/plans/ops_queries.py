@@ -7981,65 +7981,6 @@ def q198_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q199_image_phash_dedup",
-    oracle="""
-    WITH m AS (SELECT doc_id, doc_id % 97 AS seed FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS INT) AS distance
-    FROM m a JOIN m b ON a.seed = b.seed AND a.doc_id < b.doc_id
-    """,
-    doc="Image-level near-duplicate detection end-to-end "
-    "(operators/imagehash.py): REAL JPEG decode (q194's codec) -> "
-    "perceptual hash (32x32 area resample, 2-D DCT-II, median-"
-    "thresholded low-frequency block -> 64-bit pHash, Zauner 2010) -> "
-    "LSH-banded Hamming join (4x16-bit bands, pigeonhole recall "
-    "guarantee for distance < bands, df-capped buckets — the MinHash/"
-    "winnowing discipline applied to images). The query plants one "
-    "noise image per document with seed = doc_id % 97: equal seeds "
-    "give byte-identical JPEGs, hence equal pHashes and distance-0 "
-    "pairs; the 97 distinct seeds were verified pairwise hash-distinct "
-    "(test_imagehash.py pins this), so the banded join must recover "
-    "EXACTLY the within-seed pairs and the oracle is pure arithmetic. "
-    "The perceptual part (recompressed copies at small nonzero "
-    "distance, cross-quality Hamming 2 at q100-vs-q85) is "
-    "differential-tested in test_imagehash.py — distance-0 grading "
-    "keeps the oracle deterministic while the full banding + "
-    "bit_count verify path still runs.",
-)
-def q199_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from atiesh_spark.operators.imagehash import (
-        near_dup_pairs_by_phash,
-        phash_images,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from atiesh_spark.operators.jpeg import encode_jpeg_baseline
-
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                s = int(did) % 97
-                px = (
-                    (np.arange(32 * 32, dtype=np.int64)
-                     * (2654435761 + s * 97) + s * s * 1013)
-                    % 251 % 256
-                ).reshape(32, 32).astype(np.uint8)
-                blobs.append(encode_jpeg_baseline(px, quality=100))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    media = widen_for_python_stage(docs).mapInPandas(synth, schema="doc_id long, blob binary")
-    hashes = phash_images(media, "doc_id", "blob", codec="jpeg")
-    return near_dup_pairs_by_phash(hashes, max_distance=0, bands=4)
-
-
-@register(
     "q200_gif_frame_sample",
     headline=True,
     oracle="""
@@ -8122,213 +8063,6 @@ def q200_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id", "frame_idx", "width", "height",
         "mean_r", "mean_g", "mean_b",
     )
-
-
-@register(
-    "q201_audio_spectral",
-    oracle="""
-    WITH w AS (
-        SELECT doc_id, ww.w AS window_idx
-        FROM documents, unnest(generate_series(0, 3)) AS ww(w)
-    )
-    SELECT doc_id AS media_id, CAST(window_idx AS INT) AS window_idx,
-           CAST(3 + (doc_id * 3 + window_idx * 7) % 60 AS INT)
-               AS planted_bin,
-           CAST(3 + (doc_id * 3 + window_idx * 7) % 60 AS INT)
-               AS peak_bin,
-           TRUE AS centroid_ok, TRUE AS rms_ok
-    FROM w
-    """,
-    doc="Frequency-domain audio features (operators/audio.py "
-    "spectral_features): rectangular-window STFT over PCM16 channel 0, "
-    "per-window dominant peak bin, power-weighted spectral centroid, "
-    "and normalized RMS. The query plants one 4-window WAV per "
-    "document, window w a pure sine at EXACT bin 3 + (doc_id*3 + "
-    "w*7) % 60 with amplitude 0.25 + (doc_id % 5)/8; an exact-bin "
-    "tone concentrates in one rfft bin, so peak_bin is graded by "
-    "EQUALITY while centroid (|c - bin| < 0.01) and RMS (|rms - "
-    "A/sqrt(2)| < 0.001, robust to PCM16 quantization at ~1e-5) are "
-    "graded as planted-truth booleans — the sketch-family pattern for "
-    "float-valued operators. The half-sample phase offset in the "
-    "synthesis keeps every sample nonzero. O(N log N) row-local work, "
-    "zero shuffles; feature rows are ~10^4 x smaller than the audio.",
-)
-def q201_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from atiesh_spark.operators.audio import spectral_features
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from atiesh_spark.operators.multimodal import encode_wav
-
-        i = np.arange(256)
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                amp = 0.25 + (did % 5) * 0.125
-                parts = [
-                    amp * np.sin(
-                        2 * np.pi * (3 + (did * 3 + w * 7) % 60)
-                        * (i + 0.5) / 256
-                    )
-                    for w in range(4)
-                ]
-                pcm = np.round(
-                    32767 * np.concatenate(parts)
-                ).astype("<i2").tobytes()
-                blobs.append(encode_wav(8000, pcm))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    media = widen_for_python_stage(docs).mapInPandas(synth, schema="doc_id long, blob binary")
-    feats = spectral_features(media, "doc_id", "blob", frame=256)
-    planted = F.lit(3) + (F.col("media_id") * 3 + F.col("window_idx") * 7) % 60
-    amp = F.lit(0.25) + (F.col("media_id") % 5) * F.lit(0.125)
-    return feats.filter(F.col("error").isNull()).select(
-        "media_id",
-        "window_idx",
-        planted.cast("int").alias("planted_bin"),
-        "peak_bin",
-        (F.abs(F.col("centroid") - planted) < 0.01).alias("centroid_ok"),
-        (F.abs(F.col("rms") - amp / F.sqrt(F.lit(2.0))) < 0.001)
-            .alias("rms_ok"),
-    )
-
-
-_M64 = (1 << 64) - 1  # 64-bit wraparound for the seed-mixing hashes
-
-
-def synth_seeded_wav(docs: DataFrame, seeds: int) -> DataFrame:
-    """Planted tone-sequence WAVs, seed = doc_id % seeds (sqmix bin
-    formula). The registered q202 pins seeds=53 so its DuckDB oracle
-    can enumerate the duplicate groups; scripts/scale_probe.py scales
-    ``seeds`` with the corpus so docs-per-seed — hence dup-group size
-    and pair output — stays CONSTANT under a 10x probe (a real corpus
-    grows its doc count, not its duplicate multiplicity)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from atiesh_spark.operators.multimodal import encode_wav
-
-        i = np.arange(256)
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                s = int(did) % seeds
-                # splitmix-style 64-bit mix of (seed, window): the
-                # earlier polynomial-mod-97 formula made the WHOLE tone
-                # sequence a function of s % 97, so any seed count
-                # beyond 97 silently merged duplicate groups (measured:
-                # 530 scaled-probe seeds collapsed to ~97 patterns,
-                # median gram df 94 -> 472, join fan-out 54x). Mixing
-                # keeps sequences distinct at any seed count; bins stay
-                # in [4, 100] within every 128-bin frame.
-                bins = []
-                for w in range(10):
-                    h = (s * 0x9E3779B97F4A7C15
-                         + w * 0xBF58476D1CE4E5B9) & _M64
-                    h ^= h >> 31
-                    h = (h * 0xD6E8FEB86659FD93) & _M64
-                    h ^= h >> 32
-                    bins.append(4 + h % 97)
-                parts = [
-                    0.5 * np.sin(2 * np.pi * b * (i + 0.5) / 256)
-                    for b in bins
-                ]
-                pcm = np.round(
-                    32767 * np.concatenate(parts)
-                ).astype("<i2").tobytes()
-                blobs.append(encode_wav(8000, pcm))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return widen_for_python_stage(docs).mapInPandas(synth, schema="doc_id long, blob binary")
-
-
-def synth_seeded_gif(docs: DataFrame, seeds: int) -> DataFrame:
-    """Planted 6-frame noise GIFs, seed = doc_id % seeds; same scaled-
-    seeds rationale as synth_seeded_wav (q204 pins seeds=43)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from atiesh_spark.operators.gif import encode_gif
-
-        pal = np.stack([np.arange(256)] * 3, axis=-1).astype(np.uint8)
-        n = np.arange(32 * 32, dtype=np.int64)
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                s = int(did) % seeds
-                # Same mixed-hash rationale as synth_seeded_wav: the
-                # old affine-mod-251 pattern made every frame a
-                # function of s % 251, merging duplicate groups once
-                # the scaled probe crossed 251 seeds.
-                frames = []
-                for f in range(6):
-                    h = (s * 0x9E3779B97F4A7C15
-                         + f * 0x94D049BB133111EB) & _M64
-                    h ^= h >> 31
-                    h = (h * 0xD6E8FEB86659FD93) & _M64
-                    h ^= h >> 32
-                    mult = 1 + h % 250
-                    off = (h >> 16) % 251
-                    frames.append(
-                        ((n * mult + off) % 251 % 256)
-                        .reshape(32, 32).astype(np.uint8)
-                    )
-                blobs.append(encode_gif(frames, pal))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return widen_for_python_stage(docs).mapInPandas(synth, schema="doc_id long, blob binary")
-
-
-@register(
-    "q202_audio_fingerprint_dedup",
-    oracle="""
-    WITH m AS (SELECT doc_id, doc_id % 53 AS seed FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(8 AS BIGINT) AS shared_grams
-    FROM m a JOIN m b ON a.seed = b.seed AND a.doc_id < b.doc_id
-    """,
-    doc="Audio near-duplicate detection end-to-end (operators/audio.py "
-    "audio_fingerprint + audio_near_dup_pairs; the Shazam-family "
-    "landmark idea, Wang 2003, reduced to its gradable core): STFT "
-    "peak-bin sequence -> 3-gram landmark packing (8 bits/bin into "
-    "one int64 — collision-free packing, not a hash) -> df-capped "
-    "equi-join on the packed gram -> pairs with >= 4 shared grams. "
-    "The query plants one 10-window tone sequence per document from "
-    "seed = doc_id % 53 via the sqmix bin formula; equal seeds give "
-    "byte-identical WAVs hence all 8 grams shared, and the 53 seeds "
-    "were verified pairwise to share at most 3 grams (pinned by "
-    "test_audio.py::test_planted_seed_grams_pairwise_distinct), so "
-    "the min_shared=4 gate recovers EXACTLY the within-seed pairs "
-    "and the oracle is pure arithmetic. Docs meet only through equal "
-    "grams (the MinHash/winnowing candidate discipline); fan-out is "
-    "bounded by |grams| * max_df², never |docs|².",
-)
-def q202_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from atiesh_spark.operators.audio import (
-        audio_fingerprint,
-        audio_near_dup_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = synth_seeded_wav(docs, seeds=53)
-    fp = audio_fingerprint(media, "doc_id", "blob", frame=256, gram=3)
-    return audio_near_dup_pairs(fp, min_shared=4)
 
 
 def synth_mixed_media(docs: DataFrame) -> DataFrame:
@@ -8432,43 +8166,6 @@ def q203_media_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     return catalog_media(synth_mixed_media(docs), "doc_id", "blob")
-
-
-@register(
-    "q204_gif_temporal_dedup",
-    oracle="""
-    WITH m AS (SELECT doc_id, doc_id % 43 AS seed FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(4 AS BIGINT) AS shared_grams
-    FROM m a JOIN m b ON a.seed = b.seed AND a.doc_id < b.doc_id
-    """,
-    doc="Video-shaped temporal near-duplicate detection end-to-end "
-    "(operators/video.py): GIF decode (q200's codec) -> per-frame "
-    "BT.601-luma pHash (q199's hash) -> time-ordered 3-gram "
-    "xxhash64 fingerprints via ONE window lead (JVM-side, no Python "
-    "in the gram stage) -> df-capped equi-join pairs. The query "
-    "plants one 6-frame noise animation per document from seed = "
-    "doc_id % 43; equal seeds give byte-identical GIFs hence all 4 "
-    "temporal grams shared, and all 43x6 planted frames were "
-    "verified pairwise pHash-distinct (pinned by test_video.py), so "
-    "cross-seed docs share ZERO grams and the oracle is pure "
-    "arithmetic. Temporal order is the point of the gram: a shuffled "
-    "frame multiset is NOT a near-duplicate animation "
-    "(test_temporal_grams_order_sensitive). Candidate fan-out is "
-    "bounded by |grams| * max_df², the shared discipline of the "
-    "MinHash/winnowing/image/audio dedup family.",
-)
-def q204_gif_temporal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from atiesh_spark.operators.video import (
-        frame_phashes,
-        temporal_grams,
-        temporal_near_dup_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = synth_seeded_gif(docs, seeds=43)
-    ph = frame_phashes(media, "doc_id", "blob")
-    return temporal_near_dup_pairs(temporal_grams(ph, gram=3), min_shared=3)
 
 
 @register(
@@ -10936,7 +10633,7 @@ def q233_phrase_index_stream_replay(
     "= 40*f from the container clock), sampled at stride 2 — so the "
     "oracle is generate_series(0, nf-1, 2) and both engines rebuild "
     "the identical frame table from documents alone. Malformed "
-    "containers / frames are error ROWS (tested in test_video.py), "
+    "containers / frames are error ROWS (tested in test_avi.py), "
     "excluded here by construction. Plan shape for 100 TB: synth and "
     "sample/decode are TWO chained mapInPandas stages over pruned "
     "(id, blob) columns, zero exchanges, bytes never visit the "
@@ -11931,109 +11628,6 @@ def q242_mpeg_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-def _pdf_fixture_blob(d: int) -> bytes:
-    """The q243/q249 shared fixture: one PDF for document ``d`` —
-    1-3 pages of 'doc (d) page p #k' text under a rotating page
-    ENCODING ((d+p)%4: literal Tj with escaped parens / TJ array /
-    hex string / split Tj shows) and a rotating FILE LAYOUT (d%4:
-    classic xref, xref stream, +ObjStm, +PNG-predicted xref), deflate
-    on even ids."""
-    from atiesh_spark.sources.pdfsrc import encode_pdf, text_page
-
-    def esc(s: bytes) -> bytes:
-        return (s.replace(b"\\", b"\\\\").replace(b"(", b"\\(")
-                 .replace(b")", b"\\)"))
-
-    def page_bytes(p: int) -> bytes:
-        text = f"doc ({d}) page {p} #{d * 7 + p}".encode("latin-1")
-        layout = (d + p) % 4
-        if layout == 0:
-            return text_page(text)
-        if layout == 1:
-            third = max(1, len(text) // 3)
-            a, b, c = (text[:third], text[third : 2 * third],
-                       text[2 * third :])
-            return (b"BT /F1 12 Tf 72 720 Td [(" + esc(a)
-                    + b") -120 (" + esc(b) + b") -80 (" + esc(c)
-                    + b")] TJ ET")
-        if layout == 2:
-            return (b"BT /F1 12 Tf 72 720 Td <"
-                    + text.hex().encode("ascii") + b"> Tj ET")
-        half = len(text) // 2
-        return (b"BT /F1 12 Tf 72 720 Td (" + esc(text[:half])
-                + b") Tj 0 -14 Td (" + esc(text[half:]) + b") Tj ET")
-
-    fl = d % 4
-    return encode_pdf(
-        [page_bytes(p) for p in range(1 + d % 3)],
-        compress=(d % 2 == 0),
-        xref_stream=fl >= 1,
-        objstm=fl >= 2,
-        predictor=fl == 3,
-    )
-
-
-@register(
-    "q243_pdf_text",
-    oracle="""
-    SELECT doc_id AS pdf_id,
-           CAST(p.p AS INT) AS page_index,
-           'doc (' || doc_id || ') page ' || p.p || ' #'
-               || (doc_id * 7 + p.p) AS text,
-           CAST(length('doc (' || doc_id || ') page ' || p.p || ' #'
-               || (doc_id * 7 + p.p)) AS INT) AS n_chars
-    FROM documents,
-         unnest(generate_series(0, doc_id % 3)) AS p(p)
-    """,
-    doc="PDF text extraction end-to-end (sources/pdfsrc.py, round 10 "
-    "— r9 verdict item 4, the last bulk-ingestion container a "
-    "training-data pipeline could not read): per document one PDF "
-    "with 1-3 pages is synthesized by the module's own writer in a "
-    "rotating FILE LAYOUT — classic xref table, PDF 1.5 xref "
-    "stream, xref stream + ObjStm-packed dictionaries, and the "
-    "full modern layout with PNG-predicted xref rows (the "
-    "dominant real-world shape) — "
-    "writer (catalog -> pages tree -> page objects -> content "
-    "streams, FlateDecode on even doc_ids, stored on odd), then "
-    "parse_pdf_pages explodes the blobs back into per-page text "
-    "rows: the xref CHAIN walked (classic tables, xref streams "
-    "incl. /W//Index/type-2 rows and PNG predictor reversal, "
-    "ObjStm member extraction; /Prev-chain + scan-fallback "
-    "recovery paths are unit-tested), /Length resolved, streams "
-    "inflated under the zipsrc budget discipline, the page tree "
-    "walked with cycle/depth guards, and the text-showing operators "
-    "lexed for real. Page text is identical across four rotating "
-    "ENCODINGS — (0) one literal Tj with escaped parentheses, (1) a "
-    "TJ array with kerning numbers interleaved, (2) a hex string, "
-    "(3) split consecutive Tj shows — so the oracle is one string "
-    "concat per (doc, page) while the graded path exercises every "
-    "string syntax. Encrypted PDFs, object streams, and non-Flate "
-    "filters are typed error rows (test_pdfsrc.py). Plan shape: "
-    "chained mapInPandas over pruned (doc_id), zero exchanges, "
-    "parallelism = documents; at 100 TB the scale axis is document "
-    "COUNT, per-document work linear in bytes.",
-)
-def q243_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from atiesh_spark.sources.pdfsrc import parse_pdf_pages
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [_pdf_fixture_blob(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame({"pdf_id": pdf["doc_id"], "blob": blobs})
-
-    media = widen_for_python_stage(docs).mapInPandas(synth, schema="pdf_id long, blob binary")
-    return parse_pdf_pages(media, "blob", id_cols=("pdf_id",)).select(
-        "pdf_id", "page_index", "text", "n_chars",
-    )
-
-
 @register(
     "q244_crawl_stream_replay",
     # Graded EQUAL to the one-shot composite: the streaming twin must
@@ -12403,78 +11997,6 @@ def q248_zip64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("size").cast("long").alias("size"),
         F.md5("body").alias("body_md5"),
     )
-
-
-@register(
-    "q249_pdf_corpus_ingest",
-    # Shares q243's oracle verbatim (set right below): the archive
-    # transport must be invisible to extracted page content.
-    oracle=None,
-    headline=True,
-    doc="Bulk PDF-corpus ingestion composite (round 10): how PDF "
-    "dumps actually arrive — ARCHIVES of documents — composing three "
-    "graded operators end-to-end in ONE plan: per document a PDF in "
-    "q243's rotating file layout (classic/xref-stream/ObjStm/"
-    "predictor) is packed as 'doc/{id}.pdf' into one of 8 tar.gz "
-    "shards (encode_tar in applyInPandas), parse_tar_members "
-    "explodes the archives (budgeted multi-member gunzip, checksum "
-    "verification), the member NAME recovers the document id "
-    "(regexp codegen), and parse_pdf_pages extracts per-page text. "
-    "Graded against q243's oracle VERBATIM — tar framing, gzip "
-    "wrapping, and PDF layout all invisible to page content. Plan "
-    "shape: pack groupBy (harness-only; production reads binaryFile "
-    "archives) -> two chained mapInPandas stages -> zero further "
-    "exchanges; parallelism = archives then members; every budget "
-    "(inflate caps, member counts, stream/page/tree budgets) "
-    "enforced before allocation.",
-)
-def q249_pdf_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from atiesh_spark.sources.pdfsrc import parse_pdf_pages
-    from atiesh_spark.sources.tarsrc import encode_tar, parse_tar_members
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", (F.col("doc_id") % 8).alias("archive_id")
-    )
-
-    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        members = [
-            (f"doc/{int(d)}.pdf", _pdf_fixture_blob(int(d)))
-            for d in pdf["doc_id"]
-        ]
-        return pd.DataFrame(
-            {"archive_id": [key[0]],
-             "blob": [encode_tar(members, compression="gz")]}
-        )
-
-    blobs = docs.groupBy("archive_id").applyInPandas(
-        pack, "archive_id bigint, blob binary"
-    )
-    members = parse_tar_members(blobs, "blob").select(
-        F.regexp_extract("name", r"doc/(\d+)\.pdf", 1)
-        .cast("long").alias("pdf_id"),
-        F.col("body").alias("blob"),
-    )
-    # The pack exchange bounds the whole downstream stage at the
-    # archive count (AQE then coalesces the tiny partitions further),
-    # so the PDF parse — the expensive Python stage — would run on a
-    # handful of cores. Re-spread the per-member rows (small: one
-    # PDF blob each) so the parse uses the full box; the target tracks
-    # defaultParallelism, not a local constant.
-    return parse_pdf_pages(
-        members.repartition(spark.sparkContext.defaultParallelism),
-        "blob", id_cols=("pdf_id",)
-    ).select(
-        "pdf_id", "page_index", "text", "n_chars",
-    )
-
-
-_QUERIES["q249_pdf_corpus_ingest"] = _dc.replace(
-    _QUERIES["q249_pdf_corpus_ingest"],
-    oracle=_QUERIES["q243_pdf_text"].oracle,
-)
 
 
 @register(

@@ -44,8 +44,10 @@ def apply_transform(
     (null-on-error) try-expression with the previous value. Only sound
     for expressions with try_* semantics (casts, arithmetic, parsing);
     for others a raised error fails the task, which is Spark's honest
-    default.
+    default. Any other ``on_error`` value raises ValueError.
     """
+    if on_error not in (None, "keep_original"):
+        raise ValueError(f"on_error must be 'keep_original' or unset, got {on_error!r}")
     out = df
     for col, expr in exprs.items():
         e = F.expr(expr)

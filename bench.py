@@ -121,7 +121,6 @@ ANCHORS: dict[str, float] = {
     # went row-local (sorted-run walk, no gram shuffle; BASELINE.md
     # r14 note) — canary-certified solo best-of-3 on the new plan
     "q216_corpus_chrf": 3.48, "q235_crawl_pipeline": 2.40,
-    "q249_pdf_corpus_ingest": 3.28,
     # first recorded value is BENCH_full_r10.json (no BASELINE.md row)
     "q157_pack_offsets": 0.32,
 }

@@ -80,16 +80,6 @@ HEAVY = [
     # round 8: the codec-heaviest row-local media cell (GIF encode +
     # stride-2 LZW decode per doc) — should scale ~linearly
     "q200_gif_frame_sample",
-    # round 8: the rest of the media lab. q199 composes JPEG decode +
-    # pHash (vectorized area resample + DCT) with the LSH-banded
-    # Hamming join (the only media cell with a join); q201/q202 are
-    # row-local WAV synth + rFFT per doc feeding either a codegen agg
-    # (q201) or the landmark-pair self-join (q202); q204 chains the
-    # GIF codec with per-frame pHash and an adjacent-frame lag window.
-    "q199_image_phash_dedup",
-    "q201_audio_spectral",
-    "q202_audio_fingerprint_dedup",
-    "q204_gif_temporal_dedup",
     # round 8 (session 2): the generation-eval family — the char-gram
     # explode (6 orders x every char x both sides) is the heaviest
     # relational text path added this round; BLEU is its word twin
@@ -126,14 +116,13 @@ HEAVY = [
     "q237_bmp_decode",
     "q238_tiff_decode",
     "q241_image_resize",
-    # round 10: MPEG-1 Layer I/II frame synth + bitstream decode and
-    # the PDF writer/parser round trip — both row-local mapInPandas
-    # chains whose scale axis is document count; and the streaming
+    # round 10: MPEG-1 Layer I/II frame synth + bitstream decode — a
+    # row-local mapInPandas chain whose scale axis is document count;
+    # and the streaming
     # crawl twin (4 foreachBatch rounds over the q235 chain + an
     # O(hosts x reasons) store merge — fixed round count, so the
     # ratio tracks the underlying chain)
     "q242_mpeg_audio_decode",
-    "q243_pdf_text",
     "q244_crawl_stream_replay",
     # round 10 (session close): the archive-compression closure —
     # same shard-parallel shape as q239/q240, scale axis = archive
@@ -487,71 +476,6 @@ def main() -> None:
         "ratio": round(b["total_sec"] / a["total_sec"], 2),
     }
     print(f"  pq_ann_k256: {a} -> {b}", file=sys.stderr)
-
-    # Media lab (round 8): the registered q202/q204 pin their seed
-    # modulus (53/43) so the DuckDB oracle can enumerate the duplicate
-    # groups; at 10x docs that planting grows every group 10x and the
-    # pair OUTPUT quadratically — a testdata setting, not an operator
-    # property (the q55/q110 precedent). The scale path keeps docs-
-    # per-seed constant by scaling the modulus with the corpus, which
-    # is what a real corpus does: more documents, same duplicate
-    # multiplicity. The decode stages (synth + FFT / LZW + pHash) are
-    # row-local and should stay ~linear; the gram join is df-capped.
-    from atiesh_spark.operators.audio import (
-        audio_fingerprint,
-        audio_near_dup_pairs,
-    )
-    from atiesh_spark.operators.video import (
-        frame_phashes,
-        temporal_grams,
-        temporal_near_dup_pairs,
-    )
-    from atiesh_spark.plans.ops_queries import (
-        synth_seeded_gif,
-        synth_seeded_wav,
-    )
-
-    def run_df(build) -> float:
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        return round(best, 2)
-
-    def audio_cell(sf_dir: str, seeds: int):
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        fp = audio_fingerprint(
-            synth_seeded_wav(docs, seeds), "doc_id", "blob",
-            frame=256, gram=3,
-        )
-        return audio_near_dup_pairs(fp, min_shared=4)
-
-    a = run_df(lambda: audio_cell(BASE, 53))
-    b = run_df(lambda: audio_cell(OUT, 53 * COPIES))
-    out["audio_fp_dedup_scaled_seeds"] = {
-        "sf0.1_sec": a, "sf1_sec": b, "ratio": round(b / a, 2)
-    }
-    print(f"  audio_fp_dedup_scaled_seeds: {a}s -> {b}s "
-          f"({round(b / a, 2)}x)", file=sys.stderr)
-
-    def gif_cell(sf_dir: str, seeds: int):
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        ph = frame_phashes(
-            synth_seeded_gif(docs, seeds), "doc_id", "blob"
-        )
-        return temporal_near_dup_pairs(
-            temporal_grams(ph, gram=3), min_shared=3
-        )
-
-    a = run_df(lambda: gif_cell(BASE, 43))
-    b = run_df(lambda: gif_cell(OUT, 43 * COPIES))
-    out["gif_temporal_dedup_scaled_seeds"] = {
-        "sf0.1_sec": a, "sf1_sec": b, "ratio": round(b / a, 2)
-    }
-    print(f"  gif_temporal_dedup_scaled_seeds: {a}s -> {b}s "
-          f"({round(b / a, 2)}x)", file=sys.stderr)
 
     print(json.dumps({"copies": COPIES, "queries": out}))
 

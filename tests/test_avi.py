@@ -254,35 +254,6 @@ class TestDibAvi:
                 want, abs=1e-3
             )
 
-    def test_temporal_dedup_over_dib(self, spark):
-        from atiesh_spark.operators.avi import encode_avi_dib
-        from atiesh_spark.operators.video import (
-            frame_phashes,
-            temporal_grams,
-            temporal_near_dup_pairs,
-        )
-        import numpy as np
-
-        def mk(seed):
-            rng = np.random.default_rng(seed)
-            y, x = np.mgrid[0:32, 0:48]
-            return [((x * (f + 2) + y * int(rng.integers(1, 9))) % 256)
-                    .astype(np.uint8)[..., None].repeat(3, axis=2)
-                    for f in range(4)]
-
-        a = mk(1)
-        df = spark.createDataFrame(
-            [(1, bytearray(encode_avi_dib(a))),
-             (2, bytearray(encode_avi_dib(a))),
-             (3, bytearray(encode_avi_dib(mk(2))))],
-            "media_id long, blob binary",
-        )
-        pairs = temporal_near_dup_pairs(
-            temporal_grams(frame_phashes(df, "media_id", "blob"), gram=3),
-            min_shared=2,
-        ).collect()
-        assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
-
     def test_bad_dib_frame_is_error_row(self, spark):
         import struct as st
 

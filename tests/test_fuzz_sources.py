@@ -18,7 +18,6 @@ from atiesh_spark.operators.mpeg_audio import (
     mpeg_audio_header,
     parse_mpeg_frames,
 )
-from atiesh_spark.sources.pdfsrc import encode_pdf, extract_pdf_pages, text_page
 from atiesh_spark.sources.tarsrc import parse_tar_blob
 from atiesh_spark.sources.zipsrc import encode_zip, parse_zip_blob
 
@@ -62,38 +61,6 @@ _EDITS = st.lists(
     st.tuples(st.integers(0, 1 << 20), st.integers(0, 255)),
     min_size=1, max_size=8,
 )
-
-
-class TestPdfFuzz:
-    @FUZZ
-    @given(st.binary(max_size=512))
-    def test_arbitrary_bytes(self, blob):
-        try:
-            with watchdog():
-                pages = extract_pdf_pages(b"%PDF-1.4\n" + blob)
-            assert isinstance(pages, list)
-        except (ValueError, RecursionError):
-            pass
-
-    @FUZZ
-    @given(_EDITS, st.booleans(), st.booleans(), st.booleans())
-    def test_mutated_valid_pdf(self, edits, xref_stream, objstm,
-                               narrow_xref):
-        base = encode_pdf(
-            [text_page(b"alpha"), text_page(b"beta (x)")],
-            xref_stream=xref_stream or objstm, objstm=objstm,
-        )
-        if narrow_xref and not (xref_stream or objstm):
-            # round-11 stride-detection path: 19-byte xref entries
-            import re
-
-            base = re.sub(rb"(\d{10} \d{5} [nf]) \n", rb"\1\n", base)
-        try:
-            with watchdog():
-                pages = extract_pdf_pages(_mutate(base, edits))
-            assert isinstance(pages, list)
-        except (ValueError, RecursionError):
-            pass
 
 
 class TestArchiveFuzz:

@@ -763,45 +763,17 @@ def test_capped_lsh_plan_shapes(spark):
 
 
 def test_round8_media_lab_plan_shapes(spark):
-    """Round-8 media family plan gates:
-
-    - q201 (spectral features) and q203 (media catalog) are row-local
-      mapInPandas pipelines: the ONLY exchange permitted is
-      widen_for_python_stage's round-robin repartition (inserted on
-      narrow inputs so the Python decode stage uses every core; a
-      no-op on warehouse-wide inputs). No hash/range exchange — the
-      decoded rows themselves never shuffle.
-    - q202 (audio landmark dedup) and q204 (temporal pHash dedup)
-      candidate-join through equal grams only: no cartesian product or
-      nested-loop join anywhere in their physical plans.
+    """Round-8 media family plan gate: q203 (media catalog) is a
+    row-local mapInPandas pipeline: the ONLY exchange permitted is
+    widen_for_python_stage's round-robin repartition (inserted on
+    narrow inputs so the Python decode stage uses every core; a no-op
+    on warehouse-wide inputs). No hash/range exchange — the decoded
+    rows themselves never shuffle.
     """
-    for name in ("q201_audio_spectral", "q203_media_catalog"):
+    for name in ("q203_media_catalog",):
         plan = plan_of(spark, name)
         assert "hashpartitioning" not in plan and "rangepartitioning" not in plan, name
         assert plan.count("RoundRobinPartitioning") <= 1, name
-    for name in ("q202_audio_fingerprint_dedup", "q204_gif_temporal_dedup"):
-        plan = plan_of(spark, name)
-        assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-def test_temporal_gram_stage_is_jvm_side(spark):
-    """video.temporal_grams on an already-materialized phash frame is
-    pure window + xxhash64 codegen: one exchange (the media_id window
-    partition), no Python evaluation."""
-    from atiesh_spark.operators.video import temporal_grams
-
-    ph = spark.createDataFrame(
-        [(1, 0, 11, None), (1, 1, 22, None), (1, 2, 33, None)],
-        "media_id long, frame_idx int, phash long, error string",
-    )
-    g = temporal_grams(ph, gram=3)
-    plan = g._sc._jvm.PythonSQLUtils.explainString(
-        g._jdf.queryExecution(), "simple"
-    )
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_every_headline_cell_has_a_baseline_anchor():
@@ -859,16 +831,15 @@ def test_avi_frame_stats_plan_is_zero_exchange(spark):
 
 def test_round10_ingestion_plan_shapes(spark):
     """Round-10 ingestion cells keep the container-stack shuffle
-    story: the per-document decode chains (MPEG audio, PDF text,
-    WAV layouts, robots parsing) are chained mapInPandas over pruned
-    columns with ZERO hash exchanges; the archive round trips and
-    the PDF-corpus composite allow exactly ONE (the pack groupBy,
-    test-harness-only — production reads binaryFile archives); no
-    plan may contain a cartesian product."""
-    zero_exchange = ["q242_mpeg_audio_decode", "q243_pdf_text",
+    story: the per-document decode chains (MPEG audio, WAV layouts,
+    robots parsing) are chained mapInPandas over pruned columns with
+    ZERO hash exchanges; the archive round trips allow exactly ONE
+    (the pack groupBy, test-harness-only — production reads binaryFile
+    archives); no plan may contain a cartesian product."""
+    zero_exchange = ["q242_mpeg_audio_decode",
                      "q245_wav_layouts", "q250_robots_parse"]
     one_exchange = ["q246_tarxz_roundtrip", "q247_warcgz_roundtrip",
-                    "q248_zip64_roundtrip", "q249_pdf_corpus_ingest"]
+                    "q248_zip64_roundtrip"]
     for name, cap in [(n, 0) for n in zero_exchange] + [
             (n, 1) for n in one_exchange]:
         df = QUERIES[name].spark(spark, SF_SMALL)

@@ -234,6 +234,66 @@ def test_sink_spec_options_reach_writer():
     assert (w.timeout, w.query_key) == (30, "q")
 
 
+def _two_pipeline_spec(tmp_path, interceptors, bad_sink):
+    """devzero -> memory, then devzero -> every interceptor -> bad_sink."""
+
+    def pipe(i, chain, sink):
+        return {
+            "name": f"two-phase-{i}",
+            "source": "gen",
+            "interceptors": chain,
+            "sinks": [sink],
+            "trigger": {"processingTime": "10 seconds"},
+            "checkpoint": str(tmp_path / f"ckpt{i}"),
+        }
+
+    return {
+        "sources": {"gen": {"type": "devzero"}},
+        "interceptors": interceptors,
+        "sinks": {"mem": {"type": "memory", "collected": []}, "bad": bad_sink},
+        "pipelines": [pipe(0, [], "mem"), pipe(1, list(interceptors), "bad")],
+    }
+
+
+def _assert_start_fails_before_any_query(spark, spec, match):
+    p = Pipeline(spark, spec)
+    try:
+        with pytest.raises(ValueError, match=match):
+            p.start()
+        assert [q.name for q in spark.streams.active if q.name.startswith("two-phase-")] == []
+    finally:
+        for q in spark.streams.active:
+            if q.name.startswith("two-phase-"):
+                q.stop()
+
+
+def test_start_builds_every_pipeline_before_any_query(spark, tmp_path):
+    """A bad sink value in a later pipeline fails start() before the
+    earlier pipeline's query runs, so the caller holds no orphan query."""
+    spec = _two_pipeline_spec(tmp_path, {}, {"type": "syslog", "facility": "local9"})
+    _assert_start_fails_before_any_query(spark, spec, "facility must be .*, got 'local9'")
+
+
+def test_transform_on_error(spark, tmp_path):
+    """keep_original keeps the original value where a try_* expression
+    yields null; any other on_error value is rejected, before any query
+    starts."""
+    from atiesh_spark.streaming.interceptors import apply_transform
+
+    df = spark.createDataFrame([("12",), ("x",)], "value string")
+    out = apply_transform(
+        df, {"value": "CAST(try_cast(value AS INT) * 2 AS STRING)"}, on_error="keep_original"
+    )
+    assert [r["value"] for r in out.collect()] == ["24", "x"]
+
+    spec = _two_pipeline_spec(
+        tmp_path,
+        {"tx": {"type": "transform", "exprs": {"value": "upper(value)"}, "on_error": "keep-original"}},
+        {"type": "memory", "collected": []},
+    )
+    _assert_start_fails_before_any_query(spark, spec, "on_error must be 'keep_original'")
+
+
 def test_json_file_source_pipeline(spark, tmp_path):
     """Schema'd JSON file source -> canonical events with header capture."""
     src = tmp_path / "in"
