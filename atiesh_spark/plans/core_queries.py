@@ -58,7 +58,6 @@ def q03_devnull(spark: SparkSession, sf_dir: str) -> DataFrame:
            unnest(string_split(text, ' ')) AS value
     FROM documents
     """,
-    headline=True,
     doc="HTTP body delimiter split: one request body -> N events "
     "(HttpSource.scala:60-72,116-117); explode(split()) keeps it JVM-side.",
 )
@@ -119,7 +118,6 @@ def q07_base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     ) WHERE route IS NOT NULL GROUP BY route
     """,
-    headline=True,
     doc="first-accepted sink selection: event goes to the FIRST sink whose "
     "accept() is true, else discarded (Source.scala:46-56,339-365).",
 )
@@ -139,7 +137,6 @@ def q08_route_first_accepted(spark: SparkSession, sf_dir: str) -> DataFrame:
            string_agg(CAST(event_id AS VARCHAR), chr(10) ORDER BY event_id) AS body
     FROM events GROUP BY event_type
     """,
-    headline=True,
     doc="BatchSinkSemantics per-tag buffers (BatchSinkSemantics.scala:155-178) "
     "+ newline batch-body join (HttpSink.scala:151-154). Deterministic order "
     "via explicit sort key (mailbox order has no parallel equivalent).",
@@ -218,7 +215,6 @@ def q11_header_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE CAST(json_extract_string(props, '$.k') AS INT) >= 50
     """,
-    headline=True,
     doc="Schema-on-read: the reference treats payloads as opaque strings "
     "parsed ad hoc by components (SURVEY §1.1); here the JSON props "
     "column is parsed declaratively (get_json_object) with the extracted "
@@ -240,7 +236,6 @@ def q46_schema_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
            event_type, count(*) AS cnt
     FROM events GROUP BY 1, 2
     """,
-    headline=True,
     doc="Tumbling event-time window — additive capability (the reference "
     "has no event time, SURVEY §2.7); batch-checkable as 10-min bucketing.",
 )
@@ -260,7 +255,6 @@ def q12_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey
     GROUP BY n.n_name
     """,
-    headline=True,
     doc="CachedProxy-style enrichment (CachedProxy.scala:232-258): remote "
     "dictionary lookup becomes a broadcast hash join against a small dim — "
     "no shuffle of the fact side.",

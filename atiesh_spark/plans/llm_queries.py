@@ -99,7 +99,6 @@ buckets AS (
     SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_dups
     FROM documents GROUP BY md5(text)
     """,
-    headline=True,
     doc="Exact dedup by content hash: one shuffle on md5, min-id survivor "
     "policy. The canonical 100 TB first pass.",
 )
@@ -151,7 +150,6 @@ def q25_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bands a JOIN bands b
       ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
     """,
-    headline=True,
     doc="MinHash+LSH near-dup candidates: 32 md5-family hashes, 4 bands x "
     "8 rows (r=8 keeps j~0.5 collision odds under 2% while j>=0.9 pairs "
     "collide at ~80%); pair join runs per (band, band_sig) bucket — "
@@ -258,7 +256,6 @@ def q49_token_budget_take(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distributed; driver loop carries only the converged bit). "
     "cluster_id = min doc id = the dedup survivor. Oracle: recursive-CTE "
     "transitive closure over the same pairs.",
-    headline=True,
 )
 def q41_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -291,7 +288,6 @@ def q41_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM scored
     ) WHERE rank <= 5
     """,
-    headline=True,
     doc="Top-5 TF-IDF tokens per doc (add-one smoothed, scores rounded "
     "before ranking for engine-independent tie-breaks). df table is a "
     "broadcast dim; two shuffles total.",
@@ -341,7 +337,6 @@ def q28_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY vec_id
     ORDER BY sim DESC, vec_id LIMIT 10
     """,
-    headline=True,
     doc="Brute-force cosine top-k (query vec_id=0): broadcast query vector, "
     "zip_with/aggregate array algebra in codegen, TakeOrdered top-k. The "
     "exact baseline for ANN.",
@@ -437,7 +432,6 @@ def q31_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / greatest(len(list_filter(regexp_split_to_array(text, '\\s+'), t -> length(t) > 0)), 1), 4) AS stopword_ratio
     FROM documents
     """,
-    headline=True,
     doc="Per-doc quality scoring: char/token counts, avg token length, "
     "punctuation + stopword ratios — all codegen'd regex/array exprs.",
 )
@@ -528,7 +522,6 @@ def q35_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON sb.doc_id = id_2
     WHERE round(i / (sa.sz + sb.sz - i), 4) >= 0.7
     """,
-    headline=True,
     doc="The 100 TB near-dup pipeline end-to-end: MinHash-LSH candidate "
     "generation (q26's linear bucket join) followed by exact Jaccard "
     "verification computed ONLY on the candidate pairs — shingles join "
@@ -580,7 +573,6 @@ def q51_jaccard_verified_candidates(spark: SparkSession, sf_dir: str) -> DataFra
         GROUP BY c.id_1, c.id_2
     ) WHERE sim >= 0.35
     """,
-    headline=True,
     doc="Embedding near-dup pairs, LSH mode (the scale path): cosine is "
     "evaluated only within hyperplane-LSH buckets (16 buckets, md5 "
     "planes), never as a full cross product — recall tradeoff at bucket "
@@ -1035,7 +1027,6 @@ def q54_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM scored
     ) WHERE rank <= 3
     """,
-    headline=True,
     doc="All-to-all k-NN join (top-3 neighbors for EVERY vector): the "
     "batch similarity-search workhorse behind near-dup clustering and "
     "retrieval-corpus construction. Candidates restricted to shared LSH "
@@ -1294,7 +1285,6 @@ l2 AS (SELECT doc_id, s.ord AS ord, s.line AS line, trim(s.line) AS norm FROM ln
            len(t0.ls) - coalesce(reb.n_lines_kept, 0) AS n_lines_removed
     FROM t0 LEFT JOIN reb USING (doc_id)
     """,
-    headline=True,
     doc="Cross-document line dedup (operators/corpus.py line_dedup): the "
     "C4/RefinedWeb boilerplate-removal pass — any trimmed line occurring "
     "in >= 2 distinct docs is dropped from every doc, survivors "
@@ -1592,7 +1582,6 @@ def q81_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN (SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS cost
                FROM selected GROUP BY lang) s USING (lang)
     """,
-    headline=True,
     doc="The composite LLM-curation flagship (operators/curation.py "
     "curate_corpus): quality gate (length bounds + mean-word-length "
     "screen; thresholds 100-450 chars / mean-wl 4.6 picked from the "
@@ -1616,7 +1605,6 @@ def q82_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q85_global_index",
-    headline=True,  # r4: the count-job + index-job driver loop gets timed
     oracle="""
     SELECT doc_id, n_chars,
            row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS global_idx
@@ -1663,7 +1651,6 @@ def q86_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q139_leakage_safe_split",
-    headline=True,
     oracle="""
     WITH h AS (SELECT doc_id, md5(text) AS hh FROM documents),
     reps AS (SELECT hh, MIN(doc_id) AS cluster_rep FROM h GROUP BY hh)

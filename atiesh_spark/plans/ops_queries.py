@@ -234,7 +234,6 @@ def q92_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q93_window_overlap",
-    headline=True,
     oracle="""
     WITH w0 AS (
         SELECT doc_id,
@@ -278,7 +277,6 @@ def q93_window_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q94_lm_quality",
-    headline=True,
     oracle="""
     WITH tri AS (
         SELECT doc_id, substring(text, i, 3) AS sh
@@ -435,7 +433,6 @@ def q97_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q98_pca_embeddings",
-    headline=True,  # r4: the moment-collect + eigensolve driver phase gets timed
     oracle="SELECT true AS centered, true AS variance_matches_eigenvalues, "
     "true AS variance_nonincreasing, true AS reconstruction_tight",
     doc="Distributed PCA over the embedding column (operators/"
@@ -911,7 +908,6 @@ def q106_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored GROUP BY doc_id
     ORDER BY score DESC, doc_id LIMIT 15
     """,
-    headline=True,
     doc="Okapi BM25 top-k full-text search (operators/retrieval.py "
     "bm25_topk, k1=1.2 b=0.75): the lexical-retrieval workhorse for "
     "targeted curation and retrieval-based decontamination. Work is "
@@ -1143,7 +1139,6 @@ def q110_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
            t.lang AS actual, b.pred_label = t.lang AS correct
     FROM best b JOIN test t USING (doc_id)
     """,
-    headline=True,
     doc="In-engine multinomial Naive Bayes text classifier "
     "(operators/classify.py nb_train/nb_predict): the model-based "
     "curation gate (GPT-3-style quality classifier, language-ID "
@@ -1450,7 +1445,6 @@ def q116_bm25_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM selected GROUP BY lang) s USING (lang)
     GROUP BY n.lang, b.n, d.n, s.n, s.cost
     """,
-    headline=True,
     doc="The full pretraining-corpus build as ONE declarative plan, "
     "composing the round-4 surface end-to-end: Unicode normalize "
     "(NFC + casefold + whitespace collapse, Arrow pandas UDF) -> "
@@ -2498,7 +2492,6 @@ def q134_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q135_threshold_sweep",
-    headline=True,
     oracle="""
     WITH g AS (
         SELECT CAST(n_chars AS DOUBLE) AS threshold,
@@ -2555,7 +2548,6 @@ def q135_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q136_drift_report",
-    headline=True,
     oracle="""
     WITH a AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
     b AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
@@ -2893,7 +2885,6 @@ def q138_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q140_quantile_rollup",
-    headline=True,
     oracle="""
     WITH base AS (
         SELECT ts, CAST(value AS DOUBLE) AS v FROM events
@@ -3111,7 +3102,6 @@ def q142_clean_corpus_stream_replay(
     "q143_ivf_pq_bench",
     oracle="SELECT true AS count_ok, true AS scan_bounded, "
     "true AS codes_ok",
-    headline=True,
     doc="Reduced-iteration IVF-PQ bench cell (operators/similarity.py "
     "ivf_pq_fit/encode/topk at 1 Lloyd round): the round-5 verdict's "
     "ask — q137/q138 are solo-recorded and scale-probed but too slow "
@@ -3171,11 +3161,6 @@ def q143_ivf_pq_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "count_ok boolean, scan_bounded boolean, codes_ok boolean",
     )
-
-
-_Q144_URL_RE = (
-    r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$"
-)
 
 
 def _psl_sql_list() -> str:
@@ -3261,7 +3246,6 @@ def _psl_sql_list() -> str:
            || (CASE WHEN q <> '' THEN '?' || q ELSE '' END) AS canonical_url
     FROM norm
     """.replace("__PSL_LIST__", _psl_sql_list()),
-    headline=True,
     doc="URL canonicalization (operators/web.py canonicalize_urls): "
     "the first step of every crawl-derived pipeline — scheme/host "
     "lowercasing, www. strip, default-port strip (non-default ports "
@@ -3385,7 +3369,6 @@ def q145_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
            AS t FROM s7)
     SELECT doc_id, trim(t) AS clean_text FROM s8
     """,
-    headline=True,
     doc="Markup stripping (functions/text.py strip_markup): the text-"
     "extraction step between a crawl snapshot and every text operator "
     "— script/style elements dropped wholesale, comments dropped, "
@@ -3544,7 +3527,6 @@ def q147_ann_index_delete_replay(
     FROM t0 LEFT JOIN kept k USING (doc_id)
     GROUP BY t0.doc_id, t0.ls
     """,
-    headline=True,
     doc="Intra-document line dedup (operators/corpus.py "
     "intra_doc_line_dedup): the complement of q68's cross-document C4 "
     "rule — scraped pages repeat their own nav/footer blocks "
@@ -3640,7 +3622,6 @@ def q148_intra_doc_line_dedup(
             AND n_stop_words >= 1) AS pass
     FROM m
     """,
-    headline=True,
     doc="Gopher quality gate (operators/textstats.py gopher_rules; Rae "
     "et al. 2021 Appendix A): the composite curation DECISION behind "
     "MassiveText — q32-q35/q57 expose individual signals, this emits "
@@ -3702,7 +3683,6 @@ def q149_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(dup), 6) AS dup_share
     FROM flagged, tot GROUP BY grp, tot.t
     """,
-    headline=True,
     doc="Dataset card (operators/profile.py dataset_card): the per-"
     "group release table — doc counts and corpus share, char totals/"
     "means, exact interpolated p50/p95 lengths (Spark percentile ≡ "
@@ -3853,7 +3833,6 @@ def q151_wordpiece_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM walk w JOIN sents s USING (doc_id, i)
     GROUP BY w.doc_id, w.chunk
     """,
-    headline=True,
     doc="Sentence-aware chunking (operators/corpus.py sentence_chunks): "
     "the retrieval/RAG indexing step q70's fixed-width windows "
     "approximate — segment on [.!?]+whitespace (boundary MARKING via "
@@ -4189,7 +4168,6 @@ def q156_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w2 AS (PARTITION BY shard, pack_id ORDER BY doc_id
                   ROWS UNBOUNDED PRECEDING)
     """,
-    headline=True,
     doc="Packing with intra-pack offsets (operators/sampling.py "
     "pack_with_offsets): q59 assigns docs to fixed-cost packs; this "
     "adds what the trainer actually consumes — seq_index and the "
@@ -4622,7 +4600,6 @@ def q162_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q163_winnow_fingerprints",
-    headline=True,
     oracle="""
     WITH s AS (
         SELECT doc_id, lower(text) AS t FROM documents
@@ -4685,7 +4662,6 @@ def q163_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q164_winnow_overlap_pairs",
-    headline=True,
     oracle="""
     WITH planted AS (
         SELECT doc_id,
@@ -4950,7 +4926,6 @@ def _bt_oracle_sql(iters: int = 10) -> str:
 
 @register(
     "q166_bradley_terry",
-    headline=True,
     oracle=_bt_oracle_sql(10),
     doc="Bradley-Terry preference aggregation (operators/preference.py "
     "bradley_terry — Hunter's MM algorithm, Annals of Statistics 2004, "
@@ -5060,7 +5035,6 @@ def _logreg_oracle_sql(iters: int = 10, lr: float = 0.5) -> str:
 
 @register(
     "q167_logreg_quality_gate",
-    headline=True,
     oracle=_logreg_oracle_sql(10, 0.5),
     doc="In-engine logistic regression (operators/classify.py "
     "logreg_train / logreg_score): the step past q111's Naive Bayes "
@@ -7982,7 +7956,6 @@ def q198_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q200_gif_frame_sample",
-    headline=True,
     oracle="""
     WITH m AS (
         SELECT doc_id,
@@ -8734,7 +8707,6 @@ def q210_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM judged
     GROUP BY doc_id
     """,
-    headline=True,
     doc="HTML main-content extraction (operators/web.py "
     "extract_html_content): boilerplate removal for crawl pages — the "
     "jusText/trafilatura core signal (Pomikalek 2011) reduced to its "
@@ -9320,7 +9292,6 @@ def q215_corpus_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS DOUBLE) AS chrf
     FROM scored
     """,
-    headline=True,
     doc="Corpus-level chrF2 per language group (operators/evaluate.py "
     "corpus_chrf; Popović WMT 2015): character n-gram (n=1..6, "
     "whitespace stripped) precision/recall averaged arithmetically "
@@ -10860,7 +10831,6 @@ def _crawl_page_html(d) -> "F.Column":
     FROM verdicts
     GROUP BY host, reason
     """,
-    headline=True,
     doc="The crawl-ingestion chain as ONE plan with a per-stage "
     "attrition report — the FineWeb/CCNet-shaped flagship a real "
     "crawl user runs first, composing seven already-graded operators "

@@ -41,7 +41,6 @@ class QuerySpec:
     name: str
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    headline: bool = False  # included in bench.py
     doc: str = ""
 
 
@@ -78,13 +77,12 @@ def mean_of_rounded_violations(sql: str) -> list[str]:
 def register(
     name: str,
     oracle: str | None,
-    headline: bool = False,
     doc: str = "",
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable[[SparkSession, str], DataFrame]]:
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = QuerySpec(name=name, spark=fn, oracle=oracle, headline=headline, doc=doc)
+        QUERIES[name] = QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc)
         return fn
 
     return deco

@@ -36,7 +36,6 @@ from atiesh_spark.sources.tables import load_table
     WHERE l_shipdate <= TIMESTAMP '2000-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
-    headline=True,
     doc="TPC-H Q1-style pricing summary: scan + pushed filter + hash agg "
     "(partial map-side combine, one shuffle on the 4-value group key).",
 )
@@ -100,7 +99,6 @@ def q15_revenue_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate < TIMESTAMP '1998-01-01'
     GROUP BY n.n_name
     """,
-    headline=True,
     doc="TPC-H Q5-style star join: fact orders shuffles once on o_custkey; "
     "customer joins shuffled; nation/region are broadcast (25/5 rows) so "
     "they never move the fact side.",
@@ -174,7 +172,6 @@ def q18_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_custkey, o_totalprice FROM orders
     ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
     """,
-    headline=True,
     doc="Top-k: Spark plans orderBy+limit as TakeOrderedAndProject — "
     "per-partition heap then driver merge of k rows, never a full sort. "
     "Tiebreak on o_orderkey keeps the k-boundary deterministic.",
@@ -242,7 +239,6 @@ def q21_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
     ) WHERE rn = 1
     """,
-    headline=True,
     doc="Window rank: top order per customer. One shuffle on o_custkey + "
     "within-partition sort; deterministic tiebreak.",
 )
@@ -286,7 +282,6 @@ def q43_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(quantile_cont(o_totalprice, 0.99), 2) AS p99
     FROM orders GROUP BY o_orderpriority
     """,
-    headline=True,
     doc="Exact interpolated percentiles per group (Spark percentile == "
     "DuckDB quantile_cont, verified bit-equal after rounding). At 100 TB "
     "the approximate path is q45.",

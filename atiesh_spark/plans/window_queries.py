@@ -78,7 +78,6 @@ def q36_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.rn = 1
     GROUP BY n.n_name
     """,
-    headline=True,
     doc="Composite flagship: sessionize (session_window) -> per-session "
     "funnel aggregates -> top session per user (window rank) -> broadcast "
     "dim enrichment -> final rollup. Exercises stateful windowing, "
@@ -133,7 +132,6 @@ def q50_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, min(ts) AS session_start, count(*) AS n_events
     FROM islands GROUP BY user_id, session_id
     """,
-    headline=True,
     doc="Session windows (30 min inactivity gap) per user — "
     "F.session_window in Spark; the oracle is the gaps-and-islands "
     "rewrite. One shuffle on user_id.",

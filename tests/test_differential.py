@@ -77,29 +77,6 @@ def test_snapshot_diff_matches_set_algebra(spark):
             assert r["changed_cols"] == ",".join(sorted(diff)), k
 
 
-def test_interval_join_matches_bruteforce(spark):
-    from atiesh_spark.streaming.joins import interval_join
-
-    lrows = [(i, _R.randrange(8), _T0 + timedelta(seconds=_R.randrange(0, 600)))
-             for i in range(150)]
-    rrows = [(1000 + i, _R.randrange(8), _T0 + timedelta(seconds=_R.randrange(0, 600)))
-             for i in range(150)]
-    left = spark.createDataFrame(lrows, "lid long, user_id long, ts timestamp_ntz")
-    right = spark.createDataFrame(rrows, "rid long, user_id long, ts timestamp_ntz")
-    out = interval_join(
-        left, right, on="user_id", left_ts="ts", right_ts="ts",
-        watermark="10 minutes", lower="30 seconds", upper="45 seconds",
-    ).collect()
-    got = sorted((r["lid"], r["rid"]) for r in out)
-    want = sorted(
-        (li, ri)
-        for (li, lk, lt) in lrows
-        for (ri, rk, rt) in rrows
-        if lk == rk and lt - timedelta(seconds=30) <= rt <= lt + timedelta(seconds=45)
-    )
-    assert got == want
-
-
 def test_scd2_matches_bruteforce_run_collapse(spark):
     from atiesh_spark.operators.diffing import scd2_intervals
 

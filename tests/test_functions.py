@@ -235,30 +235,6 @@ def test_normalize_text_rejects_unknown_form(spark):
         normalize_text("text", form="NFX")
 
 
-def test_register_sql_functions_exposes_seam_to_sql(spark):
-    """SQL users get the pandas-UDF seam by name: NFC/NFKC normalize
-    and the gzip round-trip, composable with builtins."""
-    from atiesh_spark.functions.sql import register_sql_functions
-
-    names = register_sql_functions(spark)
-    assert names == ["atiesh_nfc", "atiesh_nfkc", "atiesh_gzip", "atiesh_gunzip"]
-    df = spark.createDataFrame([("Café  X", ), ("ﬁne", ), (None, )], ["t"])
-    df.createOrReplaceTempView("sqlfn_docs")
-    got = spark.sql(
-        r"""SELECT trim(regexp_replace(lower(atiesh_nfc(t)), '\\s+', ' ')) AS n,
-                   atiesh_nfkc(t) AS k,
-                   decode(atiesh_gunzip(atiesh_gzip(encode(t, 'utf-8'))), 'utf-8') AS rt
-            FROM sqlfn_docs"""
-    ).collect()
-    by_n = {r["n"]: r for r in got}
-    assert "café x" in by_n          # composed + lowered + collapsed
-    assert by_n["ﬁne"]["k"] == "fine"  # NFKC ligature fold
-    assert by_n[None]["rt"] is None
-    for r in got:
-        if r["n"] is not None:
-            assert r["rt"] is not None
-
-
 def test_strip_markup_rules(spark):
     from atiesh_spark.functions.text import strip_markup
 

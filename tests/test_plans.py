@@ -690,56 +690,6 @@ def test_oracle_canon_no_mean_of_rounded():
     )
 
 
-def test_bench_cold_cells_are_real_headline_queries():
-    """Every COLD_CELLS entry must name a registered headline query —
-    a rename would otherwise silently shrink the hot tier's complement
-    and the cold cell would never be re-recorded. The hot tier must
-    also retain every >=0.5s family anchor (spot-check the heavy
-    families the round-6 verdict audits)."""
-    import bench
-    from atiesh_spark.plans.registry import QUERIES
-
-    headline = {n for n, s in QUERIES.items() if s.headline}
-    assert bench.COLD_CELLS <= headline, bench.COLD_CELLS - headline
-    hot = headline - bench.COLD_CELLS
-    for anchor in (
-        "q26_minhash_lsh", "q41_dedup_clusters", "q51_jaccard_verified_candidates",
-        "q55_knn_join", "q143_ivf_pq_bench", "q164_winnow_overlap_pairs",
-        "q166_bradley_terry", "q167_logreg_quality_gate", "q98_pca_embeddings",
-        "q107_bm25_topk", "q111_nb_classify", "q94_lm_quality",
-    ):
-        assert anchor in hot, anchor
-
-
-def test_check_anchors_reads_both_artifact_shapes(tmp_path, capsys):
-    """bench.check_anchors must accept raw bench.py output AND the
-    driver-wrapped BENCH_r{N}.json shape ({"parsed": {...}}), compute
-    ratios only for anchored cells, and gate on the aggregate."""
-    import json
-
-    import bench
-
-    inner = {
-        "queries": {"q26_minhash_lsh": bench.ANCHORS["q26_minhash_lsh"],
-                    "q_unknown_cell": 1.0},
-        "loadavg": [1.0, 2.0, 3.0], "cpus": 32,
-    }
-    raw = tmp_path / "raw.json"
-    raw.write_text(json.dumps(inner))
-    wrapped = tmp_path / "wrapped.json"
-    wrapped.write_text(json.dumps({"n": 11, "parsed": inner}))
-    for p in (raw, wrapped):
-        assert bench.check_anchors(str(p)) == 0
-        out = capsys.readouterr().out
-        assert "1.00x" in out and "q_unknown_cell" in out
-    # a 2x-aggregate artifact returns nonzero
-    bad = tmp_path / "bad.json"
-    bad.write_text(json.dumps({"queries": {
-        "q26_minhash_lsh": 3 * bench.ANCHORS["q26_minhash_lsh"]}}))
-    assert bench.check_anchors(str(bad)) == 1
-    capsys.readouterr()
-
-
 def test_capped_lsh_plan_shapes(spark):
     """Round-11 gate: the hot-bucket cap must stay a WINDOW on the
     partitioning the pair join uses, not an extra aggregate + joins
@@ -774,30 +724,6 @@ def test_round8_media_lab_plan_shapes(spark):
         plan = plan_of(spark, name)
         assert "hashpartitioning" not in plan and "rangepartitioning" not in plan, name
         assert plan.count("RoundRobinPartitioning") <= 1, name
-
-
-def test_every_headline_cell_has_a_baseline_anchor():
-    """The 2x perf gate compares BENCH_r{N} cells against BASELINE.md;
-    a headline query with neither a BASELINE.md mention nor a
-    COLD_CELLS entry has NO anchor, so a regression in it is invisible
-    to the gate (q211 shipped exactly this way in round 8 — benched
-    1.53 s, no baseline row). Mechanical guard: every headline cell
-    must appear in BASELINE.md (any row/note naming it) or be a
-    documented cold cell."""
-    import bench
-
-    headline = {n for n, s in QUERIES.items() if s.headline}
-    unanchored = sorted(headline - set(bench.ANCHORS))
-    assert not unanchored, (
-        f"headline bench cells with no bench.ANCHORS entry: "
-        f"{unanchored} — record the cell's first bench value in the "
-        "canonical anchor dict (bench.py --check-anchors reads it)"
-    )
-    stale = sorted(set(bench.ANCHORS) - headline)
-    assert not stale, f"ANCHORS entries for non-headline cells: {stale}"
-    assert all(v > 0 for v in bench.ANCHORS.values())
-    # cold cells are anchored too (the full-bench artifact covers them)
-    assert bench.COLD_CELLS <= set(bench.ANCHORS)
 
 
 def test_crawl_pipeline_plan_shape(spark):
