@@ -51,16 +51,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: canonical media column group: opaque payload + typed metadata.
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),
-    ]
-)
-
 DECODED_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

@@ -157,9 +157,3 @@ class Pipeline:
         for q in self._queries:
             q.processAllAvailable()
         self.stop()
-
-
-def run_pipeline(spark: SparkSession, spec: dict[str, Any]) -> Pipeline:
-    p = Pipeline(spark, spec)
-    p.start()
-    return p

@@ -54,7 +54,7 @@ def get_spark(
         # Older driver testdata stored events.ts as TIMESTAMP(NANOS),
         # which Spark's reader rejects; this reads the raw int64 and the
         # loader converts. Harmless no-op on the current timestamp[us]
-        # layout (load_table branches on the type actually read).
+        # layout (load_table branches on the type in the parquet footer).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

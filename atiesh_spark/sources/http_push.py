@@ -33,7 +33,6 @@ Request handling parity:
 from __future__ import annotations
 
 import gzip
-import json
 import queue
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -244,11 +243,3 @@ class HttpPushDataSource(DataSource):
 
 def register_http_push(spark) -> None:
     spark.dataSource.register(HttpPushDataSource)
-
-
-# test/ops helper: a port-discovery side channel (the reader lives inside
-# the streaming engine; an ephemeral port can't be read back through the
-# DataSource API, so production use pins the port via the option).
-def write_port_file(path: str, port: int) -> None:
-    with open(path, "w") as f:
-        json.dump({"port": port}, f)

@@ -1,31 +1,55 @@
 """Batch parquet table loaders for the driver testdata.
 
-Plain ``spark.read.parquet`` — declarative scans so Catalyst gets predicate
-pushdown, column pruning and (on partitioned layouts) partition pruning for
-free. At 100 TB these would be the same calls against a partitioned/
-bucketed warehouse path.
+Every table's layout is declared once, in ``SCHEMAS``, and ``load_table``
+reads with ``spark.read.schema(...)``: a plain declarative scan (Catalyst
+still gets predicate pushdown and column pruning) that runs no Spark job,
+where an undeclared ``spark.read.parquet`` would run one schema-inference
+job per call. Nothing is re-inferred: a file whose columns differ from
+its declaration fails in ``load_table``, and a column that Spark cannot
+read as its declared type fails when the scan runs. ``events.ts`` has
+shipped in two layouts; ``load_table`` picks one from the parquet
+footer, read with pyarrow in this process.
 """
 
 from __future__ import annotations
 
-import os
-
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+TABLES = list(SCHEMAS)
 
 
 def epoch_nanos_to_ntz(nanos_col: str) -> Column:
@@ -61,38 +85,35 @@ def epoch_nanos_to_ntz(nanos_col: str) -> Column:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
+    if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
+    footer = pq.read_schema(path)
+    schema = SCHEMAS[name]
+    nanos = False
     if name == "events":
-        # the caller's session may not come from get_spark() (the driver
-        # passes its own); the nanos conf is runtime-settable, so pin it
-        # here — without it the TIMESTAMP(NANOS) footer is rejected.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        # The driver's events table has shipped with two physical layouts
-        # for ts: parquet TIMESTAMP(NANOS) (Spark reads raw int64 nanos
-        # under legacy.parquet.nanosAsLong) and plain timestamp[us] with
-        # no zone (Spark reads TIMESTAMP_NTZ directly, same naive
-        # wall-clock DuckDB sees). Branch on the type actually read so
-        # both layouts present the identical TIMESTAMP_NTZ column; only
-        # the int64 layout needs the session-timezone-independent
-        # conversion (see epoch_nanos_to_ntz).
-        from pyspark.sql.types import LongType, TimestampNTZType
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            df = df.withColumn("ts", epoch_nanos_to_ntz("ts"))
-        elif not isinstance(ts_type, TimestampNTZType):
+        # ts has shipped as naive timestamp[us] (read as TIMESTAMP_NTZ,
+        # the same wall clock DuckDB sees) and as naive TIMESTAMP(NANOS)
+        # (read as raw int64 nanos, then converted session-timezone-
+        # independently; see epoch_nanos_to_ntz). A zoned instant would
+        # need a session-timezone decision the engine refuses to guess.
+        ts_type = footer.field("ts").type
+        if ts_type == pa.timestamp("ns"):
+            nanos = True
+            schema = schema.replace("ts TIMESTAMP_NTZ", "ts BIGINT")
+            # the caller's session may not come from get_spark(); without
+            # this runtime conf Spark rejects the TIMESTAMP(NANOS) column
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        elif ts_type != pa.timestamp("us"):
             raise TypeError(
-                f"events.ts read as {ts_type}; expected int64 nanos or "
-                "TIMESTAMP_NTZ — an instant (zoned) layout would need a "
-                "session-timezone decision the engine refuses to guess"
+                f"events.ts is {ts_type} in {path}; expected naive "
+                "timestamp[us] or timestamp[ns]"
             )
+    df = spark.read.schema(schema).parquet(path)
+    if df.columns != footer.names:
+        raise ValueError(
+            f"{path} has columns {footer.names}; {name} declares {df.columns}"
+        )
+    if nanos:
+        df = df.withColumn("ts", epoch_nanos_to_ntz("ts"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql use)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

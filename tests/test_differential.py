@@ -24,14 +24,14 @@ def _round_half_up(x: float, places: int) -> float:
 from atiesh_spark.operators.diffing import snapshot_diff
 from atiesh_spark.operators.timeseries import rolling_aggregate
 
-_R = random.Random(42)
 _T0 = datetime(2024, 1, 1)
 
 
 def test_rolling_aggregate_matches_bruteforce(spark):
+    rng = random.Random(42)
     rows = [
-        (i, _R.randrange(5), _T0 + timedelta(seconds=_R.randrange(0, 400)),
-         round(_R.uniform(0, 100), 2))
+        (i, rng.randrange(5), _T0 + timedelta(seconds=rng.randrange(0, 400)),
+         round(rng.uniform(0, 100), 2))
         for i in range(300)
     ]
     df = spark.createDataFrame(
@@ -49,10 +49,11 @@ def test_rolling_aggregate_matches_bruteforce(spark):
 
 
 def test_snapshot_diff_matches_set_algebra(spark):
-    old_rows = {k: (_R.choice("abc"), _R.randrange(5)) for k in range(200)
-                if _R.random() < 0.8}
-    new_rows = {k: (_R.choice("abc"), _R.randrange(5)) for k in range(200)
-                if _R.random() < 0.8}
+    rng = random.Random(43)
+    old_rows = {k: (rng.choice("abc"), rng.randrange(5)) for k in range(200)
+                if rng.random() < 0.8}
+    new_rows = {k: (rng.choice("abc"), rng.randrange(5)) for k in range(200)
+                if rng.random() < 0.8}
     old = spark.createDataFrame(
         [(k, s, v) for k, (s, v) in old_rows.items()], "k long, s string, v long"
     )
@@ -80,8 +81,9 @@ def test_snapshot_diff_matches_set_algebra(spark):
 def test_scd2_matches_bruteforce_run_collapse(spark):
     from atiesh_spark.operators.diffing import scd2_intervals
 
+    rng = random.Random(44)
     rows = [
-        (i, _R.randrange(8), _R.randrange(1000), _R.choice(["a", "b", "c", None]))
+        (i, rng.randrange(8), rng.randrange(1000), rng.choice(["a", "b", "c", None]))
         for i in range(400)
     ]
     # unique (key, t): random duplicate order keys would make the truth
@@ -118,7 +120,8 @@ def test_weighted_sample_matches_bruteforce_es_keys(spark):
 
     from atiesh_spark.operators.sampling import weighted_sample
 
-    rows = [(i, round(_R.uniform(0.1, 50.0), 3)) for i in range(300)]
+    rng = random.Random(45)
+    rows = [(i, round(rng.uniform(0.1, 50.0), 3)) for i in range(300)]
     df = spark.createDataFrame(rows, "id long, w double")
     got = [(r["id"], r["sample_key"])
            for r in weighted_sample(df, "id", "w", k=40).collect()]
@@ -137,7 +140,8 @@ def test_cap_per_group_matches_bruteforce_hash_order(spark):
 
     from atiesh_spark.operators.curation import cap_per_group
 
-    rows = [(i, f"s{_R.randrange(4)}") for i in range(250)]
+    rng = random.Random(46)
+    rows = [(i, f"s{rng.randrange(4)}") for i in range(250)]
     df = spark.createDataFrame(rows, "id long, src string")
     got = {(r["id"], r["src"])
            for r in cap_per_group(df, "src", "id", cap=9, shards=5).collect()}
@@ -160,8 +164,8 @@ def test_transition_matrix_matches_bruteforce(spark):
 
     from atiesh_spark.operators.timeseries import transition_matrix
 
-    rows = [(i, _R.randrange(6), _R.choice("xyz")) for i in range(300)]
-    df = spark.createDataFrame(rows, "t long, k long, s string")
+    rng = random.Random(47)
+    rows = [(i, rng.randrange(6), rng.choice("xyz")) for i in range(300)]
     # make (k, t) unique so the truth is tiebreak-free
     seen = set()
     rows = [r for r in rows if (r[1], r[0]) not in seen and not seen.add((r[1], r[0]))]
