@@ -1,11 +1,11 @@
 """Config-plane helpers: spec components bound to their builders, and
-HOCON-style size and duration literals.
+HOCON-style duration literals.
 
 The reference's Configuration wrapper exposes typed getters including
-byte sizes and durations (Configuration.scala:76-139: getBytes,
-getDuration); pipeline specs here accept the same human-written literals
-("512K", "30s", "5 minutes") anywhere a byte count or duration is
-expected.
+durations (Configuration.scala:76-139: getDuration); pipeline specs here
+accept the same human-written literals ("30s", "5 minutes") anywhere a
+duration is expected. No option takes a byte size, so getBytes has no
+counterpart.
 """
 
 from __future__ import annotations
@@ -16,14 +16,6 @@ import re
 from collections.abc import Callable
 from typing import Any
 
-_SIZE_UNITS = {
-    "": 1, "b": 1,
-    "k": 1024, "kb": 1024, "kib": 1024,
-    "m": 1024**2, "mb": 1024**2, "mib": 1024**2,
-    "g": 1024**3, "gb": 1024**3, "gib": 1024**3,
-    "t": 1024**4, "tb": 1024**4, "tib": 1024**4,
-}
-
 _DURATION_UNITS = {
     "ms": 0.001, "millis": 0.001, "millisecond": 0.001, "milliseconds": 0.001,
     "s": 1.0, "sec": 1.0, "second": 1.0, "seconds": 1.0,
@@ -33,19 +25,6 @@ _DURATION_UNITS = {
 }
 
 _LITERAL = re.compile(r"^\s*(\d+(?:\.\d+)?)\s*([a-zA-Z]*)\s*$")
-
-
-def parse_bytes(value: int | str) -> int:
-    """'512K' -> 524288; bare ints pass through."""
-    if isinstance(value, int):
-        return value
-    m = _LITERAL.match(value)
-    if not m:
-        raise ValueError(f"bad size literal {value!r}")
-    num, unit = m.group(1), m.group(2).lower()
-    if unit not in _SIZE_UNITS:
-        raise ValueError(f"unknown size unit {unit!r} in {value!r}")
-    return int(float(num) * _SIZE_UNITS[unit])
 
 
 def parse_duration_seconds(value: int | float | str) -> float:

@@ -1,8 +1,6 @@
 from atiesh_spark.functions.codec import (
     base64_decode,
     base64_encode,
-    gzip_compress,
-    gzip_decompress,
 )
 from atiesh_spark.functions.maps import (
     header_lookup,
@@ -18,8 +16,6 @@ from atiesh_spark.functions.text import (
 __all__ = [
     "base64_decode",
     "base64_encode",
-    "gzip_compress",
-    "gzip_decompress",
     "header_lookup",
     "header_prefix_filter",
     "merge_headers",

@@ -1,39 +1,18 @@
 """Payload codecs.
 
 Reference behaviors covered:
-- gzip compress/decompress of bodies (reference:
-  core/.../utils/Compressor.scala:16-43, used by HttpSink.scala:166-178 and
-  HttpSource.scala:100-115) — Spark has no gzip builtin, so these are
-  Arrow-batched pandas UDFs (the one place Python is warranted; they sit in
-  writer/ingest paths, never in relational hot loops).
 - base64 encode/decode of the dump-file codec
   (HttpLimitRequestSinkSemantics.scala:313-371) — pure builtins.
+
+The reference's gzip body codec (core/.../utils/Compressor.scala) is not a
+column function here: the http sink gzips its own request bodies
+(``streaming/sinks.py``).
 """
 
 from __future__ import annotations
 
-import gzip
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
-
-
-# DataType instances (not DDL strings) so the UDFs are importable before
-# any SparkSession exists (string types are parsed via the active session).
-@pandas_udf(BinaryType())
-def gzip_compress(data: pd.Series) -> pd.Series:
-    """gzip-compress a binary column (mtime pinned for determinism)."""
-    return data.map(
-        lambda b: None if b is None else gzip.compress(bytes(b), mtime=0)
-    )
-
-
-@pandas_udf(BinaryType())
-def gzip_decompress(data: pd.Series) -> pd.Series:
-    return data.map(lambda b: None if b is None else gzip.decompress(bytes(b)))
 
 
 def base64_encode(col: Column | str) -> Column:

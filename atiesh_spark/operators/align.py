@@ -16,7 +16,7 @@ minimum-cost path by DP over the (i, j) sentence grid.
 
 Engine shape: the DP is inherently sequential per pair and ~tens of
 sentences deep — exactly the Arrow-batched Python boundary (the codec
-rule, operators/multimodal.py): one mapInPandas pass over
+rule, operators/png.py): one mapInPandas pass over
 (pair, src_sentences, tgt_sentences) rows, widened first so a narrow
 scan cannot serialize the corpus onto one core. Work is
 O(n_src * n_tgt) per pair with bounded bead lookback — never

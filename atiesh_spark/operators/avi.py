@@ -203,33 +203,16 @@ def _dib_decode_frame(data: bytes, w: int, h: int) -> "np.ndarray":
     return np.ascontiguousarray(img[::-1])  # bottom-up -> natural
 
 
-def _avi_header(blob: bytes) -> tuple[int, int, int, int]:
-    """(usec_per_frame, total_frames, width, height) from the avih
-    chunk alone — the header-only triage walk ``catalog_media`` uses.
-    Raises ValueError on anything malformed."""
-    usec, total, w, h, _ = _walk_avi(blob, frames_too=False)
-    return usec, total, w, h
-
-
-def _walk_avi(
-    blob: bytes, frames_too: bool = True
-) -> tuple[int, int, int, int, list[bytes]]:
-    """The one RIFF walk both the catalog and the frame sampler share:
-    (usec_per_frame, total_frames, width, height, frame_blobs).
-    ``frames_too=False`` skips materializing frame bytes (header-only
-    cost). Tolerates unknown chunks and LIST 'rec ' groupings per the
-    RIFF spec; raises ValueError on structural damage or budget
-    violations. Use :func:`_walk_avi_full` when the video stream's
-    codec (from strf biCompression) is also needed."""
-    usec, total, w, h, frames, _codec = _walk_avi_full(blob, frames_too)
-    return usec, total, w, h, frames
-
-
 def _walk_avi_full(
     blob: bytes, frames_too: bool = True
 ) -> tuple[int, int, int, int, list[bytes], str]:
-    """As :func:`_walk_avi` plus the video stream codec derived from
-    the strl/strf BITMAPINFOHEADER: 'mjpg' (biCompression 'MJPG'),
+    """The RIFF walk the frame sampler uses: (usec_per_frame,
+    total_frames, width, height, frame_blobs, codec).
+    ``frames_too=False`` skips materializing frame bytes (header-only
+    cost). Tolerates unknown chunks and LIST 'rec ' groupings per the
+    RIFF spec; raises ValueError on structural damage or budget
+    violations. The codec is derived from the strl/strf
+    BITMAPINFOHEADER: 'mjpg' (biCompression 'MJPG'),
     'rgb' (BI_RGB 24-bit uncompressed DIB frames, round 9), or
     'unknown' — absent/other strf falls back to 'mjpg' since MJPEG is
     what this module historically accepted and per-frame magic

@@ -108,23 +108,6 @@ def encode_bmp(
     return head + info + pal_bytes + bytes(body)
 
 
-def bmp_header(blob: bytes) -> tuple[int, int]:
-    """(width, height) from the headers alone — the O(header) triage
-    walk ``catalog_media`` uses; no pixel byte is touched."""
-    if len(blob) < 34 or blob[:2] != b"BM":
-        raise ValueError("bmp header truncated")
-    (info_size,) = struct.unpack("<I", blob[14:18])
-    if info_size < 40:
-        raise ValueError(f"unsupported DIB header size {info_size}")
-    w, h_signed, planes, bits, comp = struct.unpack("<iiHHI", blob[18:34])
-    if planes != 1 or comp != 0 or bits not in (8, 24, 32):
-        raise ValueError("unsupported bmp layout")
-    h = abs(h_signed)
-    if w <= 0 or h == 0:
-        raise ValueError("bad dimensions")
-    return w, h
-
-
 def _parse_bmp(blob: bytes) -> tuple[int, int, int, np.ndarray]:
     """(width, height, n_channels, pixels) — (h, w, 3) RGB uint8
     (palette/32-bit images come back expanded/truncated to RGB).

@@ -1,6 +1,6 @@
 """Corpus clustering over embeddings: deterministic Lloyd k-means in
-pure DataFrame ops, plus the per-cluster report a curation pipeline
-reads (domain discovery, data-map balancing, cluster-capped sampling).
+pure DataFrame ops (domain discovery, data-map balancing,
+cluster-capped sampling).
 
 SemDeDup (``similarity.semantic_dedup``) already uses MLlib KMeans as
 an internal cell index; THIS module is the user-facing clustering
@@ -173,33 +173,6 @@ def kmeans_assign(
             F.col(id_col),
             best["c"].alias("cluster"),
             F.round(best["d"], round_to).alias("sq_dist"),
-        )
-    )
-
-
-def cluster_report(
-    assignments: DataFrame,
-    cluster_col: str = "cluster",
-    dist_col: str = "sq_dist",
-    round_to: int = 6,
-) -> DataFrame:
-    """Per-cluster curation report: (cluster, n, share, mean_sq_dist) —
-    sizes for balance decisions (cap/temperature over clusters instead
-    of languages), mean within-cluster distance as the coherence
-    signal. One map-side-combined groupBy + one broadcast total."""
-    totals = assignments.agg(F.count(F.lit(1)).alias("__total"))
-    return (
-        assignments.groupBy(cluster_col)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(dist_col).alias("__md"),
-        )
-        .crossJoin(F.broadcast(totals))
-        .select(
-            F.col(cluster_col),
-            F.col("n"),
-            F.round(F.col("n") / F.col("__total"), round_to).alias("share"),
-            F.round(F.col("__md"), round_to).alias("mean_sq_dist"),
         )
     )
 

@@ -1,101 +1,18 @@
-"""Output compaction / file-sizing operators.
+"""Training-shard export: the last step of a curation pipeline, where a
+trainer's data loader takes over.
 
 At 100 TB a pipeline's dominant operational failure is its OUTPUT
-layout: a wide final stage writes one file per task (thousands of tiny
-files that choke metastores and downstream scans), while naive
-coalesce(1)-style fixes serialize the write. These helpers size output
-files to a target using Spark's own machinery — the AQE REBALANCE
-shuffle (advisory-partition-sized, skew-splitting, no extra count or
-sample pass) — and cluster rows within files for scan locality.
-
-Design notes (Spark-first):
-- ``df.hint("rebalance")`` + ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
-  is the idiomatic Spark 3.2+ file-sizing path: AQE coalesces small
-  shuffle partitions and SPLITS skewed ones at runtime, so output files
-  land near the advisory size without any driver-side row counting.
-- The advisory size governs in-memory shuffle bytes; parquet+zstd/snappy
-  compresses ~``compression_ratio``x smaller, so the advisory is set to
-  ``target_file_mb * compression_ratio``.
-- Clustering (sortWithinPartitions) is the poor-man's z-order: rows with
-  equal/nearby cluster keys co-locate in row groups, so min/max row-group
-  stats prune aggressively on those columns at read time.
+layout: a wide final stage writes one file per task into every shard
+directory (thousands of tiny files that choke metastores and
+downstream scans). ``export_training_shards`` routes each shard's rows
+to its own writer tasks first, so each shard directory gets a few
+well-sized files.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_ADVISORY_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-
-
-@contextmanager
-def _advisory_size(spark: SparkSession, nbytes: int):
-    old = spark.conf.get(_ADVISORY_KEY, None)
-    spark.conf.set(_ADVISORY_KEY, str(nbytes))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(_ADVISORY_KEY)
-        else:
-            spark.conf.set(_ADVISORY_KEY, old)
-
-
-def write_sized_parquet(
-    df: DataFrame,
-    path: str,
-    target_file_mb: int = 128,
-    compression_ratio: float = 3.0,
-    partition_cols: list[str] | None = None,
-    cluster_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet with ~``target_file_mb`` files via AQE rebalance.
-
-    ``partition_cols`` become directory partitions (the rebalance is
-    keyed on them so each directory's files are well-sized, not one
-    file per task per directory — the classic small-file explosion).
-    ``cluster_cols`` sort rows within each output file for row-group
-    stat pruning on those columns.
-    """
-    spark = df.sparkSession
-    advisory = int(target_file_mb * 1024 * 1024 * compression_ratio)
-    out = df.hint("rebalance", *(partition_cols or []))
-    if cluster_cols:
-        out = out.sortWithinPartitions(*(partition_cols or []), *cluster_cols)
-    with _advisory_size(spark, advisory):
-        writer = out.write.mode(mode)
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
-
-
-def compact_dataset(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_file_mb: int = 128,
-    compression_ratio: float = 3.0,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Small-file compaction: read a fragmented parquet dataset and
-    rewrite it with target-sized files (the maintenance job every
-    streaming sink needs — each micro-batch appends its own files).
-
-    Pass the source's ``partition_cols`` to PRESERVE its directory
-    layout — omitting them on a partitioned dataset flattens it, losing
-    partition pruning for every downstream reader.
-    """
-    write_sized_parquet(
-        spark.read.parquet(src_path),
-        dst_path,
-        target_file_mb=target_file_mb,
-        compression_ratio=compression_ratio,
-        partition_cols=partition_cols,
-    )
 
 
 def export_training_shards(
@@ -121,7 +38,7 @@ def export_training_shards(
     Write path: ``partitionBy(shard)`` with an explicit
     ``repartition(shard)`` first, so each shard's rows converge to its
     writer tasks instead of every task opening every shard directory
-    (the small-files failure ``compact_dataset`` exists to fix).
+    (the small-files failure).
     """
     from atiesh_spark.operators.sampling import balanced_shards
     from atiesh_spark.operators.sampling import shard_report

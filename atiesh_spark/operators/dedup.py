@@ -452,16 +452,6 @@ def _minhash_wide(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signatures, tall layout: (id_col, seed, mh) — ``mh`` is
-    the md5_long (60-bit md5 prefix) minhash, see ``_minhash_wide``."""
-    wide = _minhash_wide(df, id_col, text_col, k, num_hashes)
-    pairs = ", ".join(f"{s}, mh_{s}" for s in range(num_hashes))
-    return wide.selectExpr(id_col, f"stack({num_hashes}, {pairs}) AS (seed, mh)")
-
-
 # Canonical format stamp for PERSISTED band-signature stores. Pass this
 # as VersionedStore(format_tag=...) (sources/versioned.py) when storing
 # minhash_band_signatures output for incremental dedup: the r13

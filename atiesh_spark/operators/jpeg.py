@@ -458,7 +458,7 @@ def _parse_jpeg(blob: bytes) -> tuple[int, int, int, np.ndarray]:
     ``pixels`` is (h, w) uint8 for grayscale, (h, w, 3) RGB otherwise.
     Raises ValueError on anything malformed or non-baseline — the
     caller turns that into an ``error`` row instead of killing the
-    batch (same contract as _parse_netpbm / _parse_wav)."""
+    batch (same contract as _parse_png / _parse_bmp)."""
     if len(blob) < 4 or blob[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2

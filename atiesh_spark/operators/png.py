@@ -232,7 +232,7 @@ def _parse_png(blob: bytes) -> tuple[int, int, int, np.ndarray]:
     (palette images come back EXPANDED to RGB, c=3). Raises ValueError
     on anything malformed or unsupported — the caller turns that into
     an ``error`` row instead of killing the batch (same contract as
-    _parse_jpeg / _parse_netpbm / _parse_wav)."""
+    _parse_jpeg / _parse_bmp)."""
     if len(blob) < 8 or blob[:8] != _SIGNATURE:
         raise ValueError("not a PNG (bad signature)")
     pos, ihdr, palette, idat, ended = 8, None, None, [], False

@@ -373,36 +373,6 @@ def _read_ifd_value(blob, e, typ, count, raw):
     return list(struct.unpack(f"{e}{count}{fmt}", data))
 
 
-def tiff_header(blob: bytes) -> tuple[int, int]:
-    """(width, height) from the IFD alone — the O(header) triage walk
-    ``catalog_media`` uses; strips are never touched."""
-    if len(blob) < 8 or blob[:2] not in (b"II", b"MM"):
-        raise ValueError("not a TIFF")
-    e = "<" if blob[:2] == b"II" else ">"
-    (magic,) = struct.unpack(f"{e}H", blob[2:4])
-    if magic != 42:
-        raise ValueError(f"not a TIFF (magic {magic})")
-    (ifd_off,) = struct.unpack(f"{e}I", blob[4:8])
-    if ifd_off + 2 > len(blob):
-        raise ValueError("IFD offset out of range")
-    (n_entries,) = struct.unpack(f"{e}H", blob[ifd_off : ifd_off + 2])
-    if n_entries == 0 or ifd_off + 2 + 12 * n_entries > len(blob):
-        raise ValueError("IFD truncated")
-    w = h = None
-    for i in range(n_entries):
-        p = ifd_off + 2 + 12 * i
-        tag, typ, count = struct.unpack(f"{e}HHI", blob[p : p + 8])
-        if tag in (256, 257):
-            v = _read_ifd_value(blob, e, typ, count, blob[p + 8 : p + 12])[0]
-            if tag == 256:
-                w = v
-            else:
-                h = v
-    if not w or not h:
-        raise ValueError("missing dimensions")
-    return w, h
-
-
 def _parse_tiff(blob: bytes) -> tuple[int, int, int, np.ndarray]:
     """(width, height, n_channels, pixels) — (h, w) uint8 grayscale
     or (h, w, 3) RGB (palette expanded). Raises ValueError on

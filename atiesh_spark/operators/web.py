@@ -373,30 +373,6 @@ def canonicalize_urls(
     )
 
 
-def domain_stats(
-    df: DataFrame,
-    url_col: str,
-    round_to: int = 6,
-) -> DataFrame:
-    """Per-registered-domain corpus report over canonicalized URLs:
-    (registered_domain, n_urls, n_canonical, dup_share) where
-    ``n_canonical`` counts distinct canonical urls and ``dup_share`` is
-    the fraction of rows that are canonical-duplicates of another row —
-    the number a crawl pipeline reads before sizing ``per_source_cap``.
-    One map-side-combined groupBy on the domain; the total for the
-    share is a broadcast one-row frame."""
-    canon = canonicalize_urls(df, url_col)
-    return canon.groupBy("registered_domain").agg(
-        F.count(F.lit(1)).alias("n_urls"),
-        F.countDistinct("canonical_url").alias("n_canonical"),
-        F.round(
-            1.0
-            - F.countDistinct("canonical_url") / F.count(F.lit(1)),
-            round_to,
-        ).alias("dup_share"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # HTML main-content extraction (boilerplate removal)
 # ---------------------------------------------------------------------------

@@ -93,7 +93,6 @@ from atiesh_spark.plans import core_queries  # noqa: E402,F401
 from atiesh_spark.plans import relational_queries  # noqa: E402,F401
 from atiesh_spark.plans import llm_queries  # noqa: E402,F401
 from atiesh_spark.plans import window_queries  # noqa: E402,F401
-from atiesh_spark.plans import multimodal_queries  # noqa: E402,F401
 from atiesh_spark.plans import ops_queries  # noqa: E402,F401
 
 # ---------------------------------------------------------------------------

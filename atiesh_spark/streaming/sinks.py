@@ -79,48 +79,6 @@ def memory_rows(collected: list) -> Callable[[DataFrame, int], None]:
     return write
 
 
-# --- kafka producer shape ----------------------------------------------------
-
-
-def kafka_sink_frame(
-    df: DataFrame,
-    static_topic: str | None = None,
-    topic_header: str | None = None,
-) -> DataFrame:
-    """Shape events into Kafka's writer schema (key, value, topic).
-
-    Key is a random UUID with no partition/timestamp, exactly the
-    reference's MetadataParser (KafkaSink.scala:18-21); topic comes from
-    a per-event header with static fallback (KafkaLimitAckSink.scala:48-50)
-    — Spark's kafka sink honors a dynamic `topic` column natively.
-    """
-    if static_topic is None and topic_header is None:
-        raise ValueError("need static_topic and/or topic_header")
-    if topic_header is not None:
-        topic = F.element_at(F.col("headers"), F.lit(topic_header))
-        if static_topic is not None:
-            topic = F.coalesce(topic, F.lit(static_topic))
-    else:
-        topic = F.lit(static_topic)
-    return df.select(
-        F.expr("uuid()").alias("key"),
-        F.col("value").cast("string").alias("value"),
-        topic.alias("topic"),
-    )
-
-
-def kafka_sink_options(bootstrap_servers: str, must_send: bool = False) -> dict[str, str]:
-    """Producer options; must_send ≅ infinite retry + idempotence
-    (KafkaLimitAckSinkSemantics.scala:56-120); in-flight bounding ≅
-    producer buffer configs (max-pending-acks backpressure collapses
-    into the micro-batch barrier)."""
-    opts = {"kafka.bootstrap.servers": bootstrap_servers}
-    if must_send:
-        opts["kafka.retries"] = str(2**31 - 1)
-        opts["kafka.enable.idempotence"] = "true"
-    return opts
-
-
 # --- external sinks: one per-partition delivery loop --------------------------
 
 

@@ -10,7 +10,7 @@ import pytest
 from atiesh_spark.operators.jpeg import encode_jpeg_baseline
 from atiesh_spark.operators.avi import (
     MAX_FRAMES_PER_CONTAINER,
-    _walk_avi,
+    _walk_avi_full,
     encode_avi_mjpeg,
     sample_frames_mjpeg,
 )
@@ -40,7 +40,7 @@ def _const_avi(n_frames=5, w=24, h=16, fps=25, base=11, step=29):
 class TestContainerWalk:
     def test_round_trip(self):
         avi, frames = _const_avi()
-        usec, total, w, h, out = _walk_avi(avi)
+        usec, total, w, h, out, _ = _walk_avi_full(avi)
         assert (usec, total, w, h) == (40000, 5, 24, 16)
         assert out == frames
 
@@ -64,26 +64,26 @@ class TestContainerWalk:
         rebuilt = (
             rebuilt[:4] + struct.pack("<I", len(rebuilt) - 8) + rebuilt[8:]
         )
-        _, _, _, _, out = _walk_avi(rebuilt)
+        _, _, _, _, out, _ = _walk_avi_full(rebuilt)
         assert out == frames
 
     def test_malformed_rejects(self):
         avi, _ = _const_avi()
         with pytest.raises(ValueError, match="RIFF/AVI"):
-            _walk_avi(b"RIFF\x04\x00\x00\x00WAVE")
+            _walk_avi_full(b"RIFF\x04\x00\x00\x00WAVE")
         with pytest.raises(ValueError, match="RIFF/AVI"):
-            _walk_avi(avi[:8])
+            _walk_avi_full(avi[:8])
         with pytest.raises(ValueError, match="overruns"):
-            _walk_avi(avi[:-10])  # idx1 truncated mid-chunk
+            _walk_avi_full(avi[:-10])  # idx1 truncated mid-chunk
         # hdrl whose avih is truncated
         bad = avi.replace(b"avih" + struct.pack("<I", 56),
                           b"avih" + struct.pack("<I", 2000), 1)
         with pytest.raises(ValueError, match="avih truncated"):
-            _walk_avi(bad)
+            _walk_avi_full(bad)
         # zero dimensions are degenerate
         zero = _patch_avih(avi, 32, struct.pack("<I", 0))  # dwWidth
         with pytest.raises(ValueError, match="degenerate"):
-            _walk_avi(zero)
+            _walk_avi_full(zero)
 
     def test_budgets(self):
         avi, _ = _const_avi(n_frames=1)
@@ -92,13 +92,13 @@ class TestContainerWalk:
             avi, 32, struct.pack("<II", 1 << 16, 1 << 16)  # dwWidth/H
         )
         with pytest.raises(ValueError, match="pixel budget"):
-            _walk_avi(huge)
+            _walk_avi_full(huge)
         # claim too many frames in avih
         many = _patch_avih(
             avi, 16, struct.pack("<I", MAX_FRAMES_PER_CONTAINER + 1)
         )  # dwTotalFrames
         with pytest.raises(ValueError, match="frames"):
-            _walk_avi(many)
+            _walk_avi_full(many)
 
 
 class TestSampleFramesMjpeg:
@@ -157,45 +157,6 @@ class TestSampleFramesMjpeg:
             sample_frames_mjpeg(df, "media_id", "blob", every_n=0)
         with pytest.raises(ValueError, match="max_frames"):
             sample_frames_mjpeg(df, "media_id", "blob", max_frames=0)
-
-
-class TestIntegration:
-    def test_catalog_sniffs_avi(self, spark):
-        from atiesh_spark.operators.media import catalog_media
-
-        avi, _ = _const_avi(n_frames=4)
-        df = spark.createDataFrame(
-            [(1, bytearray(avi)), (2, bytearray(avi[:4]))],
-            "media_id long, blob binary",
-        )
-        got = {r.media_id: r for r in
-               catalog_media(df, "media_id", "blob").collect()}
-        assert (got[1].format, got[1].ok, got[1].width, got[1].height,
-                got[1].n_frames) == ("avi", True, 24, 16, 4)
-        # 4-byte RIFF prefix still sniffs wav (q203 fixture contract)
-        assert (got[2].format, got[2].ok) == ("wav", False)
-
-    def test_sample_frames_real_for_avi(self, spark):
-        """The generic sample_frames operator now emits REAL JPEG
-        payloads for AVI blobs (stub only for unknown containers)."""
-        from atiesh_spark.operators.jpeg import _parse_jpeg
-        from atiesh_spark.operators.multimodal import sample_frames
-
-        avi, frames = _const_avi(n_frames=3, fps=2)  # 500ms per frame
-        df = spark.createDataFrame(
-            [(1, bytearray(avi), 1500)],
-            "media_id long, blob binary, duration_ms long",
-        )
-        rows = {r.frame_idx: r for r in sample_frames(
-            df, "media_id", "blob", "duration_ms", every_ms=1000
-        ).collect()}
-        # 1000ms / 500000us = step 2: frames 0 and 2
-        assert set(rows) == {0, 2}
-        assert rows[2].ts_ms == 1000
-        assert bytes(rows[0].frame_blob) == frames[0]
-        w, h, nc, px = _parse_jpeg(bytes(rows[2].frame_blob))
-        assert (w, h) == (24, 16)
-        assert float(px.mean()) == float((11 + 29 * 2) % 256)
 
 
 class TestDibAvi:

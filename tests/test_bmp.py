@@ -1,6 +1,6 @@
 """BMP codec (operators/bmp.py): round-trips across layouts, row
-orders and padding, malformed rejection, and the Spark decode/catalog
-paths."""
+orders and padding, malformed rejection, and the Spark decode
+path."""
 
 import struct
 
@@ -9,7 +9,6 @@ import pytest
 
 from atiesh_spark.operators.bmp import (
     _parse_bmp,
-    bmp_header,
     decode_bmp,
     encode_bmp,
 )
@@ -77,16 +76,8 @@ class TestMalformed:
         with pytest.raises(ValueError, match="pixel budget"):
             _parse_bmp(bytes(huge))
 
-    def test_header_triage(self):
-        px = RNG.integers(0, 256, (4, 6, 3)).astype(np.uint8)
-        assert bmp_header(encode_bmp(px)) == (6, 4)
-        with pytest.raises(ValueError):
-            bmp_header(b"BM\x00\x00")
 
-
-def test_spark_decode_and_catalog(spark):
-    from atiesh_spark.operators.media import catalog_media
-
+def test_spark_decode(spark):
     px = np.full((4, 5, 3), 200, dtype=np.uint8)
     px[:, :, 1] = 100  # distinct channel means survive BGR swizzle
     rows = [
@@ -99,8 +90,3 @@ def test_spark_decode_and_catalog(spark):
     assert (got[1].format, got[1].width, got[1].height) == ("BMP", 5, 4)
     assert (got[1].mean_r, got[1].mean_g, got[1].mean_b) == (200.0, 100.0, 200.0)
     assert got[2].error is not None and got[3].error is not None
-    cat = {r.media_id: r for r in
-           catalog_media(df, "media_id", "blob").collect()}
-    assert (cat[1].format, cat[1].ok, cat[1].width, cat[1].height,
-            cat[1].n_frames) == ("bmp", True, 5, 4, 1)
-    assert (cat[2].format, cat[2].ok) == ("bmp", False)

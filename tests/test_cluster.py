@@ -8,11 +8,7 @@ import random
 
 import pytest
 
-from atiesh_spark.operators.cluster import (
-    cluster_report,
-    kmeans_assign,
-    kmeans_fit,
-)
+from atiesh_spark.operators.cluster import kmeans_assign, kmeans_fit
 
 
 def _vecs(n, d, seed):
@@ -82,16 +78,11 @@ def test_kmeans_fit_validation(spark):
         kmeans_fit(df, k=0)
 
 
-def test_assign_zero_shuffles_and_report(emb):
+def test_assign_zero_shuffles(emb):
     cents = kmeans_fit(emb, k=3, iterations=3)
     assigned = kmeans_assign(emb, cents)
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # row-local argmin, no shuffle
-
-    rep = {r["cluster"]: r for r in cluster_report(assigned).collect()}
-    assert sum(r["n"] for r in rep.values()) == 90
-    # each share is round(_, 6): the sum drifts up to k * 5e-7
-    assert abs(sum(r["share"] for r in rep.values()) - 1.0) <= len(rep) * 5e-7
 
 
 def test_kmeans_stable_across_partitioning(spark, emb):

@@ -1,74 +1,7 @@
-"""Compaction / file-sizing tests: AQE rebalance actually consolidates
-a fragmented write, clustering orders rows within files."""
+"""Training-shard export: one directory per shard, every row round-trips,
+and the manifest is persisted and balanced."""
 
 from __future__ import annotations
-
-import glob
-
-from pyspark.sql import functions as F
-
-from atiesh_spark.operators.compaction import compact_dataset, write_sized_parquet
-from atiesh_spark.sources.tables import load_table
-from tests.conftest import SF_SMALL
-
-
-def _parquet_files(path):
-    return glob.glob(f"{path}/**/*.parquet", recursive=True)
-
-
-def test_compaction_consolidates_small_files(spark, tmp_path):
-    docs = load_table(spark, SF_SMALL, "documents")
-    frag = str(tmp_path / "frag")
-    # simulate a streaming sink's small-file explosion: 32 task files
-    docs.repartition(32).write.parquet(frag)
-    assert len(_parquet_files(frag)) >= 32
-
-    compacted = str(tmp_path / "compact")
-    compact_dataset(spark, frag, compacted, target_file_mb=128)
-    n_files = len(_parquet_files(compacted))
-    assert 1 <= n_files <= 4  # tiny dataset -> AQE coalesces to ~1 file
-    # content preserved
-    assert spark.read.parquet(compacted).count() == docs.count()
-
-
-def test_write_sized_with_partitions_and_clustering(spark, tmp_path):
-    docs = load_table(spark, SF_SMALL, "documents")
-    out = str(tmp_path / "out")
-    write_sized_parquet(
-        docs, out, target_file_mb=128,
-        partition_cols=["lang"], cluster_cols=["n_chars"],
-    )
-    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
-    for lang in langs:
-        files = _parquet_files(f"{out}/lang={lang}")
-        assert 1 <= len(files) <= 2  # no per-task explosion inside a partition
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    # clustering: rows inside each file are sorted by n_chars
-    one_file = _parquet_files(out)[0]
-    vals = [r["n_chars"] for r in spark.read.parquet(one_file).collect()]
-    assert vals == sorted(vals)
-
-
-def test_advisory_conf_restored(spark, tmp_path):
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    before = spark.conf.get(key, None)
-    docs = load_table(spark, SF_SMALL, "documents")
-    write_sized_parquet(docs, str(tmp_path / "o2"), target_file_mb=64)
-    assert spark.conf.get(key, None) == before
-
-
-def test_compact_preserves_partition_layout(spark, tmp_path):
-    docs = load_table(spark, SF_SMALL, "documents")
-    frag = str(tmp_path / "pfrag")
-    docs.repartition(8).write.partitionBy("lang").parquet(frag)
-
-    out = str(tmp_path / "pcompact")
-    compact_dataset(spark, frag, out, partition_cols=["lang"])
-    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
-    for lang in langs:
-        assert len(_parquet_files(f"{out}/lang={lang}")) >= 1  # dirs kept
-    assert spark.read.parquet(out).count() == docs.count()
 
 
 def test_export_training_shards_layout_and_manifest(spark, tmp_path):

@@ -1,26 +1,10 @@
-"""Config-plane literal parsing (HOCON getBytes/getDuration parity)."""
+"""Config-plane literal parsing (HOCON getDuration parity)."""
 
 from __future__ import annotations
 
 import pytest
 
-from atiesh_spark.config import parse_bytes, parse_duration_seconds
-
-
-@pytest.mark.parametrize(
-    "lit,expected",
-    [
-        (512, 512),
-        ("512", 512),
-        ("512K", 512 * 1024),
-        ("512KiB", 512 * 1024),
-        ("1.5m", int(1.5 * 1024 * 1024)),
-        ("2G", 2 * 1024**3),
-        ("3 TB", 3 * 1024**4),
-    ],
-)
-def test_parse_bytes(lit, expected):
-    assert parse_bytes(lit) == expected
+from atiesh_spark.config import parse_duration_seconds
 
 
 @pytest.mark.parametrize(
@@ -41,7 +25,5 @@ def test_parse_duration(lit, expected):
 
 @pytest.mark.parametrize("bad", ["", "K", "12Q", "x12", "12 lightyears"])
 def test_rejects_bad_literals(bad):
-    with pytest.raises(ValueError):
-        parse_bytes(bad)
     with pytest.raises(ValueError):
         parse_duration_seconds(bad)

@@ -166,7 +166,7 @@ def test_minhash_signatures_match_python_reference(spark):
     import hashlib
     import random
 
-    from atiesh_spark.operators.dedup import minhash_signatures
+    from atiesh_spark.operators.dedup import _minhash_wide
 
     rng = random.Random(7)
     texts = ["".join(rng.choice("abcd ") for _ in range(rng.randint(1, 40)))
@@ -188,10 +188,10 @@ def test_minhash_signatures_match_python_reference(spark):
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got: dict[int, dict[int, int]] = {}
-    for r in minhash_signatures(
+    for r in _minhash_wide(
         df, "doc_id", "text", k=k, num_hashes=num_hashes
     ).collect():
-        got.setdefault(r["doc_id"], {})[r["seed"]] = r["mh"]
+        got[r["doc_id"]] = {s: r[f"mh_{s}"] for s in range(num_hashes)}
     want = {i: ref(t) for i, t in rows}
     assert got == want
 

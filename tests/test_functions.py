@@ -11,8 +11,6 @@ from pyspark.sql import functions as F
 from atiesh_spark.functions.codec import (
     base64_decode,
     base64_encode,
-    gzip_compress,
-    gzip_decompress,
 )
 from atiesh_spark.functions.maps import (
     header_lookup,
@@ -24,16 +22,6 @@ from atiesh_spark.functions.text import drop_long_lines, split_body, truncate_li
 
 def events_df(spark, values):
     return spark.createDataFrame([(v,) for v in values], "value string")
-
-
-def test_gzip_roundtrip(spark):
-    df = events_df(spark, ["hello", "", "utf8: éè€", None])
-    out = df.select(
-        F.decode(gzip_decompress(gzip_compress(F.encode("value", "UTF-8"))), "UTF-8").alias("rt"),
-        "value",
-    ).collect()
-    for r in out:
-        assert r["rt"] == r["value"]
 
 
 def test_base64_roundtrip_multibyte(spark):

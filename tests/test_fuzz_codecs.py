@@ -33,12 +33,6 @@ from atiesh_spark.operators.jpeg_progressive import (
     encode_jpeg_progressive,
     parse_jpeg_progressive,
 )
-from atiesh_spark.operators.multimodal import (
-    _parse_netpbm,
-    _parse_wav,
-    encode_ppm,
-    encode_wav,
-)
 from atiesh_spark.operators.png import _parse_png, encode_png
 from atiesh_spark.operators.tiff import _parse_tiff, encode_tiff
 from atiesh_spark.sources.warc import encode_warc_records, parse_warc_blob
@@ -202,34 +196,6 @@ class TestAviFuzz:
             jf = encode_jpeg_baseline(_RGB, quality=50)
             base = encode_avi_mjpeg([jf, jf], 5, 6)
         _check(_walk_avi_full, _mutate(base, edits))
-
-
-class TestAudioImageFuzz:
-    @FUZZ
-    @given(st.binary(max_size=300))
-    def test_wav_arbitrary_bytes(self, blob):
-        _check(_parse_wav, b"RIFF" + blob)
-
-    @FUZZ
-    @given(_EDITS, st.sampled_from([(1, 16), (1, 8), (3, 32),
-                                    (6, 8), (7, 8)]))
-    def test_wav_mutated_valid(self, edits, fmt_bits):
-        fmt, bits = fmt_bits
-        samples = bytes(range(64)) * (bits // 8)
-        base = encode_wav(8000, samples, channels=2,
-                          audio_format=fmt, bits=bits)
-        _check(_parse_wav, _mutate(base, edits))
-
-    @FUZZ
-    @given(st.binary(max_size=200), st.sampled_from([b"P5", b"P6"]))
-    def test_netpbm_arbitrary_bytes(self, blob, magic):
-        _check(_parse_netpbm, magic + b"\n" + blob)
-
-    @FUZZ
-    @given(_EDITS)
-    def test_netpbm_mutated_valid(self, edits):
-        base = encode_ppm(5, 6, bytes(range(90)))
-        _check(_parse_netpbm, _mutate(base, edits))
 
 
 class TestWarcFuzz:

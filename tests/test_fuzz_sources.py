@@ -14,10 +14,6 @@ from contextlib import contextmanager
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from atiesh_spark.operators.mpeg_audio import (
-    mpeg_audio_header,
-    parse_mpeg_frames,
-)
 from atiesh_spark.sources.tarsrc import parse_tar_blob
 from atiesh_spark.sources.zipsrc import encode_zip, parse_zip_blob
 
@@ -109,26 +105,3 @@ class TestArchiveFuzz:
         with watchdog():
             rows = list(parse_tar_blob(_mutate(blob, edits)))
         assert all(isinstance(r, dict) for r in rows)
-
-
-class TestMpegFuzz:
-    @FUZZ
-    @given(st.binary(min_size=4, max_size=600))
-    def test_arbitrary_bytes(self, blob):
-        data = b"\xff\xf0" + blob  # force the sync prefix path
-        for fn in (parse_mpeg_frames, mpeg_audio_header):
-            try:
-                fn(data)
-            except ValueError:
-                pass
-
-    @FUZZ
-    @given(_EDITS)
-    def test_mutated_valid_frame(self, edits):
-        from tests.test_mpeg_audio import _layer2_frame
-
-        base, _ = _layer2_frame()
-        try:
-            parse_mpeg_frames(_mutate(base, edits))
-        except ValueError:
-            pass

@@ -712,20 +712,6 @@ def test_capped_lsh_plan_shapes(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_round8_media_lab_plan_shapes(spark):
-    """Round-8 media family plan gate: q203 (media catalog) is a
-    row-local mapInPandas pipeline: the ONLY exchange permitted is
-    widen_for_python_stage's round-robin repartition (inserted on
-    narrow inputs so the Python decode stage uses every core; a no-op
-    on warehouse-wide inputs). No hash/range exchange — the decoded
-    rows themselves never shuffle.
-    """
-    for name in ("q203_media_catalog",):
-        plan = plan_of(spark, name)
-        assert "hashpartitioning" not in plan and "rangepartitioning" not in plan, name
-        assert plan.count("RoundRobinPartitioning") <= 1, name
-
-
 def test_crawl_pipeline_plan_shape(spark):
     """q235 composes seven operators in ONE plan: the only hash
     exchanges allowed are the WARC pack groupBy (test-harness-only),
@@ -757,13 +743,12 @@ def test_avi_frame_stats_plan_is_zero_exchange(spark):
 
 def test_round10_ingestion_plan_shapes(spark):
     """Round-10 ingestion cells keep the container-stack shuffle
-    story: the per-document decode chains (MPEG audio, WAV layouts,
-    robots parsing) are chained mapInPandas over pruned columns with
-    ZERO hash exchanges; the archive round trips allow exactly ONE
-    (the pack groupBy, test-harness-only — production reads binaryFile
-    archives); no plan may contain a cartesian product."""
-    zero_exchange = ["q242_mpeg_audio_decode",
-                     "q245_wav_layouts", "q250_robots_parse"]
+    story: the per-document robots parsing is chained mapInPandas over
+    pruned columns with ZERO hash exchanges; the archive round trips
+    allow exactly ONE (the pack groupBy, test-harness-only — production
+    reads binaryFile archives); no plan may contain a cartesian
+    product."""
+    zero_exchange = ["q250_robots_parse"]
     one_exchange = ["q246_tarxz_roundtrip", "q247_warcgz_roundtrip",
                     "q248_zip64_roundtrip"]
     for name, cap in [(n, 0) for n in zero_exchange] + [

@@ -1085,17 +1085,21 @@ def test_bitext_margin_degenerate_neighborhood_is_ansi_safe(spark):
     sign-flipped margin (negative mean)."""
     from atiesh_spark.operators.similarity import bitext_margin_pairs
 
+    # One partition per one-row frame: the constant bucket key below
+    # plans a cartesian product, whose task count is the product of
+    # the input partition counts (8 x 8 per stage on the default
+    # 8-partition parallelize) for no extra coverage.
     a = spark.createDataFrame(
         [(1, [1.0, 0.0])], "vec_id bigint, embedding array<double>"
-    )
+    ).coalesce(1)
     # orthogonal: cos = 0 -> knn means 0 -> denominator exactly 0
     b_zero = spark.createDataFrame(
         [(10, [0.0, 1.0])], "vec_id bigint, embedding array<double>"
-    )
+    ).coalesce(1)
     # opposite: cos = -1 -> denominator negative
     b_neg = spark.createDataFrame(
         [(20, [-1.0, 0.0])], "vec_id bigint, embedding array<double>"
-    )
+    ).coalesce(1)
     # num_planes=0: every vector shares the single empty-signature
     # bucket, forcing the degenerate candidates to meet
     assert bitext_margin_pairs(a, b_zero, k=2, num_planes=0).collect() == []

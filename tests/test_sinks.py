@@ -1,5 +1,5 @@
 """Unit tests for sink writers: HTTP retry/response policy, syslog
-framing, kafka frame shaping — reference edge cases from SURVEY.md §5.2."""
+framing — reference edge cases from SURVEY.md §5.2."""
 
 from __future__ import annotations
 
@@ -12,8 +12,6 @@ from atiesh_spark.streaming.sinks import (
     HttpSinkWriter,
     deliver_partition,
     format_syslog,
-    kafka_sink_frame,
-    kafka_sink_options,
 )
 
 
@@ -126,33 +124,6 @@ def test_syslog_rfc5424_framing():
 def test_syslog_rejects_unknown_rfc():
     with pytest.raises(ValueError, match="unsupported syslog rfc"):
         format_syslog("x", rfc="9999")
-
-
-def test_kafka_sink_frame_dynamic_topic(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [("a", {"topic": "t1"}), ("b", {})],
-        "value string, headers map<string,string>",
-    )
-    out = kafka_sink_frame(df, static_topic="fallback", topic_header="topic")
-    rows = {r["value"]: r for r in out.collect()}
-    assert rows["a"]["topic"] == "t1"
-    assert rows["b"]["topic"] == "fallback"
-    # key is a uuid per record (KafkaSink.scala:18-21)
-    assert len(rows["a"]["key"]) == 36 and rows["a"]["key"] != rows["b"]["key"]
-    assert sorted(out.columns) == ["key", "topic", "value"]
-
-
-def test_kafka_sink_frame_requires_topic():
-    with pytest.raises(ValueError, match="static_topic and/or topic_header"):
-        kafka_sink_frame(None)
-
-
-def test_kafka_must_send_options():
-    opts = kafka_sink_options("broker:9092", must_send=True)
-    assert opts["kafka.enable.idempotence"] == "true"
-    assert int(opts["kafka.retries"]) > 1_000_000
 
 
 def test_kafka_source_options_seek_validation():

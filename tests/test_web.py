@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from atiesh_spark.operators.web import canonicalize_urls, domain_stats
+from atiesh_spark.operators.web import canonicalize_urls
 
 
 def _canon(spark, url: str) -> dict:
@@ -99,23 +99,6 @@ def test_private_section_registered_domains(spark):
     }
     for url, want in cases.items():
         assert _canon(spark, url)["registered_domain"] == want, url
-
-
-def test_domain_stats_dup_share(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "https://www.a.com/x?utm_s=1"),
-            (2, "https://a.com/x"),  # canonical dup of 1
-            (3, "https://a.com/y"),
-            (4, "http://b.net/z"),
-        ],
-        "id long, url string",
-    )
-    rows = {r["registered_domain"]: r for r in domain_stats(df, "url").collect()}
-    assert rows["a.com"]["n_urls"] == 3
-    assert rows["a.com"]["n_canonical"] == 2
-    assert abs(rows["a.com"]["dup_share"] - (1 - 2 / 3)) < 1e-6
-    assert rows["b.net"]["dup_share"] == 0.0
 
 
 def test_canonicalize_is_idempotent(spark):
